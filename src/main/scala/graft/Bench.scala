@@ -145,32 +145,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // ERROR, not WARN: the harness keeps only a ~2.4KB stdout tail, and
     // at WARN the micro-batch queries flood it ("Failed to cancel job
     // group", AQE-disabled notices ×7) until the tail is 95% noise.
     spark.sparkContext.setLogLevel("ERROR")
-    // Warm the JVM/codegen/parquet-reader paths on a tiny table before
-    // timing starts: otherwise the alphabetically-first query absorbs
-    // ~4s of one-time init and its number stops meaning anything.
-    try {
-      spark.read.parquet(s"$sfDir/region.parquet")
-        .groupBy("r_name").count().orderBy("r_name").collect()
-      // writer paths too: the first parquet write (q101's sentinel) and
-      // first csv write (q77) otherwise absorb one-time sink init
-      val wdir = Scratch.dir("bench_warm_")
-      val tiny = spark.read.parquet(s"$sfDir/region.parquet").limit(1)
-      tiny.write.mode("overwrite").parquet(s"$wdir/p")
-      tiny.write.mode("overwrite").csv(s"$wdir/c")
-      tiny.write.mode("overwrite").orc(s"$wdir/o")
-      tiny.write.mode("overwrite").json(s"$wdir/j")
-      Scratch.deleteTree(wdir)
-    } catch { case _: Throwable => () }
+    warmUpReadWrite(spark, sfDir)
     // Same for the micro-batch engine: the first streaming query pays
     // ~2s of one-time init (streaming planner, state-store coordinator,
     // file-source listing, session-window/append state machinery) that
@@ -360,4 +340,23 @@ object Bench {
     println(s"""{"metric":"total","value":${f(runningTotal)},"unit":"sec","sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** Warms the JVM/codegen/parquet-reader paths on a tiny table before
+    * timing starts: otherwise the first timed query absorbs ~4s of
+    * one-time init and its number stops meaning anything. Writer paths
+    * too: the first parquet write (q101's sentinel) and first csv write
+    * (q77) otherwise absorb one-time sink init.
+    */
+  def warmUpReadWrite(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.read.parquet(s"$sfDir/region.parquet")
+        .groupBy("r_name").count().orderBy("r_name").collect()
+      val wdir = Scratch.dir("bench_warm_")
+      val tiny = spark.read.parquet(s"$sfDir/region.parquet").limit(1)
+      tiny.write.mode("overwrite").parquet(s"$wdir/p")
+      tiny.write.mode("overwrite").csv(s"$wdir/c")
+      tiny.write.mode("overwrite").orc(s"$wdir/o")
+      tiny.write.mode("overwrite").json(s"$wdir/j")
+      Scratch.deleteTree(wdir)
+    } catch { case _: Throwable => () }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop plan inspector: print a registered query's formatted
   * physical plan (the `.explain("formatted")` the build guide asks for
   * per operator) without writing a throwaway main each time.
@@ -16,12 +14,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val mode = if (args.length > 2) args(2) else "formatted"
-    val spark = Tables.configure(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))

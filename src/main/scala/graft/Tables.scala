@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   */
 object Tables {
   /** Session-level reader configuration every graft entry point applies
-    * at session build (Verify/Bench/Smoke/specs). Readers in this object
-    * are pure — none mutates session state as a side effect.
+    * at session build (see [[session]]). Readers in this object are
+    * pure — none mutates session state as a side effect.
     */
   val sessionConfs: Map[String, String] = Map(
     // Accept TIMESTAMP(NANOS) parquet (which Spark's reader otherwise
@@ -33,6 +33,16 @@ object Tables {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The session every graft entry point runs on: `local[cores]`, as
+    * many shuffle partitions as cores, UI off, and [[sessionConfs]].
+    */
+  def session(cores: String): SparkSession =
+    configure(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

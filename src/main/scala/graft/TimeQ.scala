@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop micro-bench for the optimization rounds: time a named
   * subset of the registry under the EXACT Bench session shape
   * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, warmed JVM)
@@ -18,25 +16,11 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: TimeQ <queryName>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("GRAFT_REPS", "2").toInt
     val planDir = sys.env.get("GRAFT_PLAN_DIR")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
-    // Bench's warmups, abbreviated: parquet reader + writer + codegen.
-    try {
-      spark.read.parquet(s"$sfDir/region.parquet")
-        .groupBy("r_name").count().orderBy("r_name").collect()
-      val wdir = Scratch.dir("timeq_warm_")
-      val tiny = spark.read.parquet(s"$sfDir/region.parquet").limit(1)
-      tiny.write.mode("overwrite").parquet(s"$wdir/p")
-      tiny.write.mode("overwrite").csv(s"$wdir/c")
-      Scratch.deleteTree(wdir)
-    } catch { case _: Throwable => () }
+    Bench.warmUpReadWrite(spark, sfDir)
     val byShort = SparkEntry.queries.keys.toSeq
       .groupBy(n => n.takeWhile(_ != '_'))
     val names = args.toSeq.map { a =>

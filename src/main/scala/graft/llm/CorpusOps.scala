@@ -181,26 +181,21 @@ object CorpusOps extends QueryModule {
       // INDEPENDENT driver actions — overlapped from a small pool
       // (guide §2.6, the q000 staging shape) so each tiny job's tail
       // back-fills the cores; per-job work and results are unchanged
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      def submit[A](body: => A): java.util.concurrent.Future[A] =
-        pool.submit(new java.util.concurrent.Callable[A] {
-          override def call(): A = body
-        })
-      val (sa, sb, sc, exact) = try {
-        val fa = submit(sketchOf(snap(3)))
-        val fb = submit(sketchOf(snap(4)))
-        val fc = submit(sketchOf(snap(5)))
+      val (sa, sb, sc, exact) = graft.Par.scope(s, 4) { p =>
+        val fa = p.fork("q215: sketch a")(sketchOf(snap(3)))
+        val fb = p.fork("q215: sketch b")(sketchOf(snap(4)))
+        val fc = p.fork("q215: sketch c")(sketchOf(snap(5)))
         def da = snap(3).distinct()
         def db = snap(4).distinct()
         def dc = snap(5).distinct()
-        val fu = submit(da.union(db).union(dc).distinct().count())
-        val fi = submit(da.intersect(db).count())
-        val fm = submit(da.except(db).count())
-        (fa.get(), fb.get(), fc.get(), Map[String, Long](
-          "a_union_b_union_c" -> fu.get(),
-          "a_intersect_b" -> fi.get(),
-          "a_minus_b" -> fm.get()))
-      } finally pool.shutdown()
+        val fu = p.fork("q215: exact union")(da.union(db).union(dc).distinct().count())
+        val fi = p.fork("q215: exact intersect")(da.intersect(db).count())
+        val fm = p.fork("q215: exact minus")(da.except(db).count())
+        (fa.join(), fb.join(), fc.join(), Map[String, Long](
+          "a_union_b_union_c" -> fu.join(),
+          "a_intersect_b" -> fi.join(),
+          "a_minus_b" -> fm.join()))
+      }
       val union3 = {
         val u = SetOperation.builder().setNominalEntries(nom).buildUnion()
         u.union(sa); u.union(sb); u.union(sc); u.getResult

@@ -110,65 +110,18 @@ object Dedup extends QueryModule {
   // (the set-table build itself lives inline in [[dfSortedSetsStaged]]
   // since the round-15 one-step staging fusion)
 
-  /** Content-addressed per-JVM staging for the similarity-join
-    * family's shared stages (the streaming replays' stagedSource
-    * contract applied to dedup): the df-sorted set table is computed
-    * ONCE per fixture dir and the θ-Jaccard pair table ONCE per
-    * (dir, θ), each written to Scratch parquet; every consumer —
-    * q236/q237 read `srt`, q243/q246/q248/q264 read the θ=0.7 pairs —
-    * scans the staged file. Within one Verify/Bench run that turns
-    * six corpus tokenize passes and four identical pair joins into
-    * one of each (~21% of round-11 bench wall time), and the staged
-    * scan is executor-resident by construction — no driver funnel,
-    * no persist/unpersist choreography, recompute-safe downstream.
-    * Safe to share: both artifacts are deterministic (total struct
-    * sort; pair join output keyed and rounded identically however
-    * partitioned). A 100 TB deployment would stage to durable object
-    * storage instead of tmpfs — the shape (fingerprint table built
-    * once, consumers read it, q225-style incremental maintenance on
-    * top) is the production shape.
+  /** Staged read of a similarity-join family stage (see [[graft.Stage]]
+    * for the staging contract): the df-sorted set table once per
+    * fixture dir, the θ-Jaccard pair table once per (dir, θ), the LSH
+    * bands/edges/components once per dir. Every consumer — q236/q237
+    * read `srt`, q243/q246/q248/q264 the θ=0.7 pairs, the cluster
+    * queries `comp` — scans the staged file. Within one Verify/Bench
+    * run that turns six corpus tokenize passes and four identical pair
+    * joins into one of each (~21% of round-11 bench wall time).
     */
-  private val simStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  // One lock PER (dir, key), not one global lock: q000 kicks the
-  // independent staging chains off concurrently (optimization guide
-  // §2.6 — overlap independent jobs so one chain's straggler tail is
-  // back-filled by the other chain's tasks), and a global lock would
-  // serialize the builds right back. Nesting (pairs→srt,
-  // pairs0.9→pairs0.7, comp→edges→bands) acquires DIFFERENT keys'
-  // locks strictly leaf-ward along the two dependency chains, and the
-  // chains share no key, so lock order is acyclic — no deadlock. The
-  // lock objects live in their own CHM: computeIfAbsent is safe here
-  // because the mapping fn only allocates an Object (never recurses),
-  // unlike the build itself.
-  private val stageLocks =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Object]()
-
   private def staged(s: SparkSession, d: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    val k = (d, key)
-    var path = simStageCache.get(k)
-    if (path == null) {
-      val lock = stageLocks.computeIfAbsent(k, _ => new Object)
-      lock.synchronized {
-        path = simStageCache.get(k)
-        if (path == null) {
-          val p = graft.Scratch.dir(s"simjoin_${key}_")
-            .resolve(s"$key.parquet").toString
-          val t0 = System.nanoTime()
-          build.write.parquet(p)
-          // dev-loop build profiler (optimization rounds): per-stage build
-          // seconds on stderr, opt-in, zero cost when unset
-          if (sys.env.contains("GRAFT_STAGE_TIMING"))
-            System.err.println(
-              f"[stage] $key ${(System.nanoTime() - t0) / 1e9}%.3f s")
-          simStageCache.put(k, p)
-          path = p
-        }
-      }
-    }
-    s.read.parquet(path)
-  }
+      (build: => DataFrame): DataFrame =
+    graft.Stage.parquet(s, s"simjoin_${key}_", d)(build)
 
   /** Distinct winnowing fingerprints (doc_id, fp): rolling-hash every
     * K=8-token gram of the lowercase-alpha token stream, keep each
@@ -290,8 +243,8 @@ object Dedup extends QueryModule {
   }
 
   /** Staged read of the full-corpus [[bandsOf]] table — the MinHash
-    * band fingerprints priced ONCE per fixture dir (round-12's staged()
-    * contract extended from the sim-join family to the LSH family).
+    * band fingerprints priced ONCE per fixture dir ([[staged]], the
+    * sim-join family's staging extended to the LSH family).
     * Consumers: q31's neighbor-count self-join, q124's incremental
     * screen, and [[edgesStaged]]. At 100 TB this IS the stored
     * fingerprint table the q124 scaladoc describes — built once on
@@ -539,13 +492,14 @@ object Dedup extends QueryModule {
       // guide §2.6: actions are only sequential because the driver
       // calls them sequentially; concurrent jobs back-fill the cores
       // each chain's straggler tails and driver-side steps — windows,
-      // broadcasts, parquet commits — leave idle). staged()'s per-key
-      // locks keep the once-per-key contract: a count whose chain is
-      // mid-build parks on that key's lock and reads the finished
-      // parquet. Every build is a deterministic DataFrame, so outputs
-      // (and the oracle'd counts) are identical however the scheduler
-      // interleaves the jobs. Chains are submitted longest-first so
-      // FIFO scheduling fills the tail with the shorter chains.
+      // broadcasts, parquet commits — leave idle). Stage.once's
+      // per-key locks keep the once-per-key contract: a count whose
+      // chain is mid-build parks on that key's lock and reads the
+      // finished parquet. Every build is a deterministic DataFrame, so
+      // outputs (and the oracle'd counts) are identical however the
+      // scheduler interleaves the jobs. Chains are submitted
+      // longest-first so FIFO scheduling fills the tail with the
+      // shorter chains.
       val tasks: Seq[(String, () => Long)] = Seq(
         "pairs09" -> (() => prefixJaccardPairs(s, d, "0.9").count()),
         "comp" -> (() => componentsStaged(s, d).count()),
@@ -555,18 +509,10 @@ object Dedup extends QueryModule {
         "edges" -> (() => edgesStaged(s, d).count()),
         "bands" -> (() => bandsStaged(s, d).count()),
         "srt" -> (() => dfSortedSetsStaged(s, d).count()))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      val counts = try {
-        val futs = tasks.map { case (name, job) =>
-          name -> pool.submit(new java.util.concurrent.Callable[Long] {
-            override def call(): Long = {
-              s.sparkContext.setJobDescription(s"staging: $name")
-              job()
-            }
-          })
-        }
-        futs.map { case (name, f) => name -> f.get() }
-      } finally pool.shutdown()
+      val counts = graft.Par.scope(s, 3) { p =>
+        tasks.map { case (name, job) => name -> p.fork(s"staging: $name")(job()) }
+          .map { case (name, f) => name -> f.join() }
+      }
       import s.implicits._
       counts.toDF("tbl", "n_rows").orderBy(col("tbl"))
     }),
@@ -1527,25 +1473,6 @@ object Dedup extends QueryModule {
           Seq("k"))
         .filter(col("a_nat") === col("b_nat"))
         .select(col("a_key"), col("b_key")).distinct()
-      // the four per-margin aggregates below (name cells, balance
-      // margin, segment margin, nation totals) are independent driver
-      // actions — overlapped from a small pool (guide §2.6, the
-      // q000/q215 shape); each job and its result are unchanged
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      def submit[A](body: => A): java.util.concurrent.Future[A] =
-        pool.submit(new java.util.concurrent.Callable[A] {
-          override def call(): A = body
-        })
-      val fCells = submit(nameCand
-        .join(a, "a_key").join(b, "b_key")
-        .filter(levenshtein(col("a_name"), col("b_name")) <= 1)
-        .groupBy(bAgree.as("ba"), sAgree.as("sa"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("a_key") === col("b_key"), 1L).otherwise(0L))
-            .as("nt"))
-        .collect()
-        .map(r => (r.getBoolean(0), r.getBoolean(1)) ->
-          (r.getAs[Long]("n"), r.getAs[Long]("nt"))).toMap)
       // (2) balance-agree margins: floor-bucket ±1 candidates (sound:
       // |Δ| ≤ 1 ⟹ floors differ by ≤ 1), exact verify, s flag
       val balCand = a
@@ -1558,21 +1485,37 @@ object Dedup extends QueryModule {
             floor(col("b_bal")).cast("long").as("fb")),
           col("an2") === col("bn2") && col("fa") === col("fb") + col("off"))
         .filter(bAgree)
-      val fBRow = submit(balCand.agg(count(lit(1)).as("ab"),
-        sum(when(sAgree, 1L).otherwise(0L)).as("abs_")).head())
-      // (3) segment-agree margin by pure count algebra; nation totals
-      val fAS = submit(a.groupBy(col("a_nat"), col("a_seg"))
-        .agg(count(lit(1)).as("ca"))
-        .join(b.groupBy(col("b_nat"), col("b_seg")).agg(count(lit(1)).as("cb")),
-          col("a_nat") === col("b_nat") && col("a_seg") === col("b_seg"))
-        .agg(sum(col("ca") * col("cb"))).head().getLong(0))
-      val fNTot = submit(a.groupBy(col("a_nat")).agg(count(lit(1)).as("ca"))
-        .join(b.groupBy(col("b_nat")).agg(count(lit(1)).as("cb")),
-          col("a_nat") === col("b_nat"))
-        .agg(sum(col("ca") * col("cb"))).head().getLong(0))
-      val (nCells, bRow, aS, nTot) =
-        try (fCells.get(), fBRow.get(), fAS.get(), fNTot.get())
-        finally pool.shutdown()
+      // the four per-margin aggregates below (name cells, balance
+      // margin, segment margin, nation totals) are independent driver
+      // actions — overlapped from a small pool (guide §2.6, the
+      // q000/q215 shape); each job and its result are unchanged
+      val (nCells, bRow, aS, nTot) = graft.Par.scope(s, 4) { p =>
+        val fCells = p.fork("q259: name cells")(nameCand
+          .join(a, "a_key").join(b, "b_key")
+          .filter(levenshtein(col("a_name"), col("b_name")) <= 1)
+          .groupBy(bAgree.as("ba"), sAgree.as("sa"))
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("a_key") === col("b_key"), 1L).otherwise(0L))
+              .as("nt"))
+          .collect()
+          .map(r => (r.getBoolean(0), r.getBoolean(1)) ->
+            (r.getAs[Long]("n"), r.getAs[Long]("nt"))).toMap)
+        val fBRow = p.fork("q259: balance margin")(balCand
+          .agg(count(lit(1)).as("ab"),
+            sum(when(sAgree, 1L).otherwise(0L)).as("abs_")).head())
+        // (3) segment-agree margin by pure count algebra; nation totals
+        val fAS = p.fork("q259: segment margin")(a
+          .groupBy(col("a_nat"), col("a_seg")).agg(count(lit(1)).as("ca"))
+          .join(b.groupBy(col("b_nat"), col("b_seg")).agg(count(lit(1)).as("cb")),
+            col("a_nat") === col("b_nat") && col("a_seg") === col("b_seg"))
+          .agg(sum(col("ca") * col("cb"))).head().getLong(0))
+        val fNTot = p.fork("q259: nation totals")(a
+          .groupBy(col("a_nat")).agg(count(lit(1)).as("ca"))
+          .join(b.groupBy(col("b_nat")).agg(count(lit(1)).as("cb")),
+            col("a_nat") === col("b_nat"))
+          .agg(sum(col("ca") * col("cb"))).head().getLong(0))
+        (fCells.join(), fBRow.join(), fAS.join(), fNTot.join())
+      }
       val aB = bRow.getAs[Long]("ab"); val aBS = bRow.getAs[Long]("abs_")
       def nCell(ba: Boolean, sa: Boolean) =
         nCells.getOrElse((ba, sa), (0L, 0L))

@@ -756,20 +756,15 @@ object StatsOps extends QueryModule {
         // pipelines (min/max head + bucket-count collect + checkpoint
         // each) — overlapped from a 2-thread pool (guide §2.6, the
         // q000/q215 shape); each build's jobs and results unchanged
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        val (rx, ry) = try {
-          val fx = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = doubledMidranks(s,
-              perUser.groupBy(col("x").as("v")).agg(count(lit(1)).as("c")))
-              .withColumnRenamed("rr", "rx")
-          })
-          val fy = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = doubledMidranks(s,
-              perUser.groupBy(col("y").as("v")).agg(count(lit(1)).as("c")))
-              .withColumnRenamed("rr", "ry")
-          })
-          (fx.get(), fy.get())
-        } finally pool.shutdown()
+        val (rx, ry) = graft.Par.scope(s, 2) { p =>
+          val fx = p.fork("q334: ranks x")(doubledMidranks(s,
+            perUser.groupBy(col("x").as("v")).agg(count(lit(1)).as("c")))
+            .withColumnRenamed("rr", "rx"))
+          val fy = p.fork("q334: ranks y")(doubledMidranks(s,
+            perUser.groupBy(col("y").as("v")).agg(count(lit(1)).as("c")))
+            .withColumnRenamed("rr", "ry"))
+          (fx.join(), fy.join())
+        }
         val dec = "decimal(38,0)"
         val ranked = perUser
           .join(rx, perUser("x") === rx("v"))

@@ -96,31 +96,16 @@ object TextPipeline extends QueryModule {
       posexplode(split(trim(encoded, "|"), "\\|\\|")).as(Seq("sidx", "sym")))
   }
 
-  /** Content-addressed per-JVM staging of the encoded symbol stream
-    * (the Dedup staged() contract): FOUR consumers (q187, q189, q204,
-    * q286) each re-ran the merge-rank collect + the 20-pass replace
-    * encode over the corpus; now the first prices one build and the
-    * rest scan the staged parquet. Deterministic (rank ties break on
-    * pair; the symbol stream is a pure function of the corpus), so
-    * every consumer's output is unchanged.
+  /** The encoded symbol stream, staged once per fixture dir (see
+    * [[graft.Stage]]): FOUR consumers (q187, q189, q204, q286) each
+    * re-ran the merge-rank collect + the 20-pass replace encode over
+    * the corpus; now the first prices one build and the rest scan the
+    * staged parquet. Deterministic (rank ties break on pair; the symbol
+    * stream is a pure function of the corpus), so every consumer's
+    * output is unchanged.
     */
-  private val bpeStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def bpeSymbolsStaged(s: SparkSession, d: String): DataFrame = {
-    var path = bpeStageCache.get(d)
-    if (path == null) bpeStageCache.synchronized {
-      path = bpeStageCache.get(d)
-      if (path == null) {
-        val p = graft.Scratch.dir("bpe_syms_")
-          .resolve("syms.parquet").toString
-        bpeSymbols(s, d).write.parquet(p)
-        bpeStageCache.put(d, p)
-        path = p
-      }
-    }
-    Tables.spread(s, s.read.parquet(path))
-  }
+  private def bpeSymbolsStaged(s: SparkSession, d: String): DataFrame =
+    Tables.spread(s, graft.Stage.parquet(s, "bpe_syms_", d)(bpeSymbols(s, d)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // BPE roundtrip validation — the tokenizer-integrity gate a

@@ -21,8 +21,8 @@ import graft.Tables
   * Both aggregates are order-free exact integers, so the DuckDB twin
   * (the same GROUP BY in every consumer's oracle) is bit-identical.
   *
-  * The table is STAGED once per fixture dir (Dedup.staged's
-  * contract): five consumers would otherwise re-run the same
+  * The table is STAGED once per fixture dir (see [[graft.Stage]]):
+  * five consumers would otherwise re-run the same
   * map-side-combinable rollup over lineitem five times per
   * Verify/Bench run. At 100 TB partsupp is a real ingested table and
   * this build is its one-time derivation job; consumers scan it
@@ -31,23 +31,13 @@ import graft.Tables
   */
 object PartSupp {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def partsupp(s: SparkSession, d: String): DataFrame = {
-    val path = cache.computeIfAbsent(d, _ => {
-      val p = graft.Scratch.dir("partsupp_").resolve("ps.parquet").toString
-      Tables.lineitem(s, d)
-        .groupBy(col("l_partkey").as("ps_partkey"),
-          col("l_suppkey").as("ps_suppkey"))
-        .agg(sum(col("l_quantity")).cast("bigint").as("ps_availqty"),
-          min(expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
-            .as("ps_cost_cents"))
-        .write.parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  def partsupp(s: SparkSession, d: String): DataFrame =
+    graft.Stage.parquet(s, "partsupp_", d)(Tables.lineitem(s, d)
+      .groupBy(col("l_partkey").as("ps_partkey"),
+        col("l_suppkey").as("ps_suppkey"))
+      .agg(sum(col("l_quantity")).cast("bigint").as("ps_availqty"),
+        min(expr("cast(round(l_extendedprice * 100, 0) as bigint)"))
+          .as("ps_cost_cents")))
 
   /** The shared SQL twin — spliced as a CTE into every consumer's
     * oracle so the surrogate is defined ONCE on both engines.

@@ -66,13 +66,7 @@ object DeepLearningPipeline {
       "usage: <input> <output> maxEpoch numLayer n0 n1 … (driver.java:26-29)")
     val Array(in, out, maxEpoch, numLayer) = args.take(4)
     val sizes = args.slice(4, 4 + numLayer.toInt).map(_.toInt).toSeq
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-dbn")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, in, out, maxEpoch.toInt, sizes)
     finally spark.stop()

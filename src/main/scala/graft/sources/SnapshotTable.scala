@@ -169,8 +169,12 @@ object SnapshotTable {
     */
   private def unionSchemaOf(s: SparkSession, dirs: Seq[String]): StructType = {
     bounded(dirSchemaCache)
-    val schemas = dirs.map(dir => dirSchemaCache.computeIfAbsent(dir,
-      d => s.read.parquet(d).schema))
+    val schemas = dirs.map(dir => Option(dirSchemaCache.get(dir)).getOrElse {
+      // inferred outside the map's bin locks: inference runs a Spark job
+      val schema = s.read.parquet(dir).schema
+      dirSchemaCache.put(dir, schema)
+      schema
+    })
     StructType(schemas.foldLeft(Seq.empty[org.apache.spark.sql.types.StructField]) {
       (acc, sc) =>
         acc ++ sc.fields.filterNot(f => acc.exists(_.name == f.name))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{QueryModule, Scratch, Tables}
+import graft.{Confs, Par, QueryModule, Scratch, Stage, Tables}
 import graft.operators.RelationalCore.{dsum, dsumSql}
 
 /** Text-format source/sink round-trip as a registered query: the
@@ -18,27 +18,21 @@ object SourceQueries extends QueryModule {
 
   private val bucketRun = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** Content-addressed per-JVM staging of the snapshot-table version
-    * HISTORIES (the q000/simjoin staged() contract applied to the
-    * snapshot fixture — round 15, guide §1.2). q363 and q364 replay
-    * the IDENTICAL deterministic history (init + two merge waves) and
-    * then only READ it (readAsOf/changesBetween are pure reads of
-    * immutable generations), so one build per (fixture dir) serves
-    * both; q373's chain diverges after wave 1 (compact instead of a
-    * second merge), so it stages its own. Nothing memoizes RESULTS:
-    * every invocation recomputes its aggregations from the staged
-    * table's parquet, and the scratch tree dies with the JVM.
+  /** The snapshot-table version HISTORY (init + wave 1 + wave 2),
+    * staged once per fixture dir (see [[graft.Stage]]). q363 and q364
+    * replay this IDENTICAL deterministic history and then only READ it
+    * (readAsOf/changesBetween are pure reads of immutable generations),
+    * so one build serves both. Wave 2 derives from the BASE rows
+    * (upsert REPLACES, so a %20 key's v2 text is base+' [rev3]', not
+    * rev2+rev3 — the oracle replays exactly that).
     */
-  private val snapHistCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.nio.file.Path]()
-
-  private def snapHistory(s: SparkSession, d: String, kind: String)(
-      build: java.nio.file.Path => Unit): java.nio.file.Path =
-    snapHistCache.computeIfAbsent((d, kind), _ => {
-      val t = Scratch.dir(s"snap_${kind}_")
-      build(t)
-      t
-    })
+  private def snapHistory(s: SparkSession, d: String): java.nio.file.Path =
+    Stage.once("snap_hist_", d) { t =>
+      val docs = Tables.documents(s, d)
+      SnapshotTable.init(s, t, docs, "doc_id")
+      SnapshotTable.merge(s, t, snapWave1(docs), "doc_id")
+      SnapshotTable.merge(s, t, snapWave2(docs), "doc_id")
+    }
 
   /** The deterministic merge batches every snapshot query replays. */
   private def snapWave1(docs: DataFrame): DataFrame = {
@@ -135,58 +129,44 @@ object SourceQueries extends QueryModule {
       val id = bucketRun.incrementAndGet()
       val liT = s"g186_li_$id"
       val ordT = s"g186_ord_$id"
-      // getOption/unset restore symmetry (the replay source's
-      // nanosAsLong pattern): if the conf was unset before, it goes
-      // BACK to unset, not to a pinned explicit value. Note the
-      // session-global set below assumes the driver's
-      // one-query-at-a-time contract — a concurrently planned query on
-      // this shared session would lose broadcast joins for the window.
-      val prevThresh = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       try {
         // the two bucketed writes are independent jobs into different
-        // tables/paths — overlapped from a 2-thread pool (guide §2.6,
-        // the q000/q215 shape); both finish before the threshold conf
-        // below changes, so neither write's planning sees it
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val fLi = pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = Tables.lineitem(s, d)
-              .select(col("l_orderkey"), col("l_quantity"),
-                col("l_extendedprice"))
-              .write.mode("overwrite").bucketBy(8, "l_orderkey")
-              .sortBy("l_orderkey")
-              .option("path", s"$stage/li").saveAsTable(liT)
-          })
-          val fOrd = pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = Tables.orders(s, d)
-              .select(col("o_orderkey"), col("o_orderstatus"))
-              .write.mode("overwrite").bucketBy(8, "o_orderkey")
-              .sortBy("o_orderkey")
-              .option("path", s"$stage/ord").saveAsTable(ordT)
-          })
-          fLi.get(); fOrd.get()
-        } finally pool.shutdown()
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val back = s.table(liT)
-          .join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("o_orderstatus"))
-          .agg(count(lit(1)).as("n_lines"),
-            round(dsum(col("l_quantity")), 2).as("sum_qty"),
-            round(dsum(col("l_extendedprice")), 2).as("sum_price"))
-          .orderBy(col("o_orderstatus"))
-        s.createDataFrame(
-          java.util.Arrays.asList(back.collect(): _*), back.schema)
+        // tables/paths — overlapped (guide §2.6, the q000/q215 shape);
+        // both finish before the threshold window below opens, so
+        // neither write's planning sees it
+        Par.scope(s, 2) { p =>
+          val fLi = p.fork("q186: bucket lineitem")(Tables.lineitem(s, d)
+            .select(col("l_orderkey"), col("l_quantity"),
+              col("l_extendedprice"))
+            .write.mode("overwrite").bucketBy(8, "l_orderkey")
+            .sortBy("l_orderkey")
+            .option("path", s"$stage/li").saveAsTable(liT))
+          val fOrd = p.fork("q186: bucket orders")(Tables.orders(s, d)
+            .select(col("o_orderkey"), col("o_orderstatus"))
+            .write.mode("overwrite").bucketBy(8, "o_orderkey")
+            .sortBy("o_orderkey")
+            .option("path", s"$stage/ord").saveAsTable(ordT))
+          fLi.join(); fOrd.join()
+        }
+        // session-global window: assumes the driver's one-query-at-a-
+        // time contract — a concurrently planned query on this shared
+        // session would lose broadcast joins for its duration
+        Confs.withConfs(s, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+          val back = s.table(liT)
+            .join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))
+            .groupBy(col("o_orderstatus"))
+            .agg(count(lit(1)).as("n_lines"),
+              round(dsum(col("l_quantity")), 2).as("sum_qty"),
+              round(dsum(col("l_extendedprice")), 2).as("sum_price"))
+            .orderBy(col("o_orderstatus"))
+          s.createDataFrame(
+            java.util.Arrays.asList(back.collect(): _*), back.schema)
+        }
       } finally {
         // each cleanup step isolated: a transient failure dropping one
         // table must not leak the other registration or the staged files
         def quietly(step: => Unit): Unit =
           try step catch { case _: Throwable => () }
-        prevThresh match {
-          case Some(v) =>
-            s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-          case None =>
-            quietly(s.conf.unset("spark.sql.autoBroadcastJoinThreshold"))
-        }
         quietly(s.sql(s"DROP TABLE IF EXISTS $liT"))
         quietly(s.sql(s"DROP TABLE IF EXISTS $ordT"))
         quietly(Scratch.deleteTree(stage))
@@ -356,16 +336,7 @@ object SourceQueries extends QueryModule {
     // reuse and bucket-granular rewrites are pinned by SnapshotSpec.
     "q363_snapshot_timetravel" -> ((s, d) => {
       import graft.llm.TextAnalysis.md5Int
-      // staged history (see [[snapHistory]]): init + wave 1 + wave 2 —
-      // wave 2 derives from the BASE rows (upsert REPLACES, so a %20
-      // key's v2 text is base+' [rev3]', not rev2+rev3 — the oracle
-      // replays exactly that); q364 reads the same staged table
-      val t = snapHistory(s, d, "hist") { t =>
-        val docs = Tables.documents(s, d)
-        SnapshotTable.init(s, t, docs, "doc_id")
-        SnapshotTable.merge(s, t, snapWave1(docs), "doc_id")
-        SnapshotTable.merge(s, t, snapWave2(docs), "doc_id")
-      }
+      val t = snapHistory(s, d)
       val stats = (0 to 2).map { v =>
         SnapshotTable.readAsOf(s, t, v)
           .agg(count(lit(1)).as("n_rows"),
@@ -394,14 +365,7 @@ object SourceQueries extends QueryModule {
     // snapshot scan (SnapshotSpec pins the scan discipline).
     "q364_snapshot_changefeed" -> ((s, d) => {
       import graft.llm.TextAnalysis.md5Int
-      // staged history shared with q363 (identical deterministic
-      // version chain; see [[snapHistory]])
-      val t = snapHistory(s, d, "hist") { t =>
-        val docs = Tables.documents(s, d)
-        SnapshotTable.init(s, t, docs, "doc_id")
-        SnapshotTable.merge(s, t, snapWave1(docs), "doc_id")
-        SnapshotTable.merge(s, t, snapWave2(docs), "doc_id")
-      }
+      val t = snapHistory(s, d)
       val stats = Seq((0, 1), (1, 2), (0, 2)).map { case (a, b) =>
         SnapshotTable.changesBetween(s, t, a, b, "doc_id")
           .groupBy(col("_change_type").as("change_type"))
@@ -428,7 +392,7 @@ object SourceQueries extends QueryModule {
       import graft.llm.TextAnalysis.md5Int
       // own staged history: the chain diverges from q363/q364's after
       // wave 1 (compaction commit instead of a second merge)
-      val t = snapHistory(s, d, "compact") { t =>
+      val t = Stage.once("snap_compact_", d) { t =>
         val docs = Tables.documents(s, d)
         SnapshotTable.init(s, t, docs, "doc_id")
         SnapshotTable.merge(s, t, snapWave1(docs), "doc_id")

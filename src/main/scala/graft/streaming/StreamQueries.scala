@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.QueryModule
+import graft.{Confs, QueryModule, Stage}
 import graft.operators.RelationalCore.{dsum, dsumSql}
 
 /** q46 — the streaming engine replaying the batch `events` fixture
@@ -32,8 +32,12 @@ object StreamQueries extends QueryModule {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   private def eventsSchema(s: SparkSession, d: String): StructType =
-    schemaCache.computeIfAbsent(d,
-      _ => s.read.parquet(s"$d/events.parquet").schema)
+    Option(schemaCache.get(d)).getOrElse {
+      // inferred outside the map's bin locks: inference runs a Spark job
+      val schema = s.read.parquet(s"$d/events.parquet").schema
+      schemaCache.put(d, schema)
+      schema
+    }
 
   private def tsType(schema: StructType): DataType = schema("ts").dataType
 
@@ -556,10 +560,8 @@ object StreamQueries extends QueryModule {
     }),
 
     "q178_stream_tws_replay" -> ((s, d) => {
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      try {
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      Confs.withConfs(s, Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
         replay(s, d, mode = "update") { stream =>
           import stream.sparkSession.implicits._
           val evs = stream.select(col("user_id").as("key"),
@@ -570,11 +572,6 @@ object StreamQueries extends QueryModule {
               round(element_at(col("mean"), 1), 6).as("mean_v"),
               round(element_at(col("mean"), 2), 6).as("mean_v2"))
         }.orderBy(col("user_id"))
-      } finally prev match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     })
   )
@@ -585,22 +582,18 @@ object StreamQueries extends QueryModule {
   // collected to a memory sink in the same call. A real deployment
   // would point checkpointLocation at durable storage.
 
-  /** Content-addressed staged-source cache: one staged copy of the
-    * events fixture per (sfDir, copies, sentinel) shape, shared across
-    * the four replay queries and across reruns in the same JVM —
-    * q46/q79 share a key outright, and repeated Verify/Bench passes
-    * pay the staging (and q101's sentinel-write Spark job) once.
-    * Safe to share: the file stream source only reads the directory,
-    * and each replay gets its own fresh checkpoint, so per-query
-    * processed-file tracking never collides.
+  /** The events fixture staged once per (sfDir, copies, sentinel)
+    * shape (see [[graft.Stage]]), shared across the replay queries and
+    * across reruns in the same JVM — q46/q79 share a key outright, and
+    * repeated Verify/Bench passes pay the staging (and q101's
+    * sentinel-write Spark job) once. Safe to share: the file stream
+    * source only reads the directory, and each replay gets its own
+    * fresh checkpoint, so per-query processed-file tracking never
+    * collides.
     */
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Boolean), java.nio.file.Path]()
-
   private def stagedSource(s: SparkSession, d: String, copies: Int,
       sentinel: Boolean): java.nio.file.Path =
-    stageCache.computeIfAbsent((d, copies, sentinel), _ => {
-      val stage = graft.Scratch.dir("replay_src_")
+    Stage.once("replay_src_", (d, copies, sentinel)) { stage =>
       val src = java.nio.file.Paths.get(s"$d/events.parquet")
       (1 to copies).foreach { i =>
         val dst = stage.resolve(s"events_$i.parquet")
@@ -622,23 +615,32 @@ object StreamQueries extends QueryModule {
         import scala.jdk.CollectionConverters._
         val row = org.apache.spark.sql.Row(
           -1L, tsValue(tsType(schema), farUs), -1L, "sentinel", 0.0, "{}")
-        val tmpOut = stage.resolve("sentinel_build")
-        s.createDataFrame(Seq(row).asJava, schema)
-          .coalesce(1).write.parquet(tmpOut.toString)
-        val listing = java.nio.file.Files.list(tmpOut)
-        val part =
-          try listing.iterator().asScala
-            .find(_.toString.endsWith(".parquet")).get
-          finally listing.close()
-        val sentinelDst = stage.resolve("events_zz_sentinel.parquet")
-        java.nio.file.Files.move(part, sentinelDst)
-        graft.Scratch.deleteTree(tmpOut)
-        java.nio.file.Files.setLastModifiedTime(sentinelDst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + 60000))
+        writeSourceFile(stage, s.createDataFrame(Seq(row).asJava, schema),
+          "events_zz_sentinel", 60000)
       }
-      stage
-    })
+    }
+
+  /** Writes `df` as the single file `<name>.parquet` in a replay source
+    * dir, its mtime `mtimePlusMs` in the future: the file source orders
+    * its batches by mtime, so the offset places the file's batch.
+    */
+  private def writeSourceFile(stage: java.nio.file.Path, df: DataFrame,
+      name: String, mtimePlusMs: Long): Unit = {
+    import scala.jdk.CollectionConverters._
+    val tmp = stage.resolve(s"${name}_build")
+    df.coalesce(1).write.parquet(tmp.toString)
+    val listing = java.nio.file.Files.list(tmp)
+    val part =
+      try listing.iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get
+      finally listing.close()
+    val dst = stage.resolve(s"$name.parquet")
+    java.nio.file.Files.move(part, dst)
+    graft.Scratch.deleteTree(tmp)
+    java.nio.file.Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() + mtimePlusMs))
+  }
 
   /** Shared replay harness: stage the events fixture into a cached
     * tmpfs dir (the file stream source requires a directory) `copies`
@@ -681,6 +683,14 @@ object StreamQueries extends QueryModule {
     r
   }
 
+  /** The session-conf window every replay harness runs in (the
+    * shuffle-partition pin is explained above); [[replay]] also turns
+    * whole-stage codegen off.
+    */
+  private val replayConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.shuffle.partitions" -> "4")
+
   /** The q150 harness: replay with a foreachBatch CDC-merge sink.
     * Per batch: keep-latest within the batch, merge with the current
     * parquet snapshot, write the next snapshot generation, swap. The
@@ -689,13 +699,9 @@ object StreamQueries extends QueryModule {
     * sized by construction (one row per user).
     */
   private def replayMergeSink(s: SparkSession, d: String): DataFrame = {
-    val prevNanos = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     val ckpt = graft.Scratch.dir("merge_ckpt_")
     val snapRoot = graft.Scratch.dir("merge_snap_")
-    try {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+    try Confs.withConfs(s, replayConfs) {
       val stage = stagedSource(s, d, copies = 2, sentinel = false)
       val schema = eventsSchema(s, d)
       val stream = s.readStream.schema(schema)
@@ -741,11 +747,6 @@ object StreamQueries extends QueryModule {
           StructField("event_id", LongType), StructField("value", DoubleType))))
         .orderBy(col("user_id"))
     } finally {
-      prevNanos match {
-        case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       graft.Scratch.deleteTree(ckpt)
       graft.Scratch.deleteTree(snapRoot)
     }
@@ -764,33 +765,14 @@ object StreamQueries extends QueryModule {
     * boundary, not just the happy path.
     */
   private def lateAuditReplay(s: SparkSession, d: String): DataFrame = {
-    val prevNanos = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     val ckpt = graft.Scratch.dir("late_ckpt_")
     val stage = graft.Scratch.dir("late_src_")
-    try {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+    try Confs.withConfs(s, replayConfs) {
       import scala.jdk.CollectionConverters._
-      def writeOne(df: DataFrame, name: String, mtimePlusMs: Long): Unit = {
-        val tmp = stage.resolve(s"${name}_build")
-        df.coalesce(1).write.parquet(tmp.toString)
-        val listing = java.nio.file.Files.list(tmp)
-        val part =
-          try listing.iterator().asScala
-            .find(_.toString.endsWith(".parquet")).get
-          finally listing.close()
-        val dst = stage.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        graft.Scratch.deleteTree(tmp)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + mtimePlusMs))
-      }
       val schema = eventsSchema(s, d)
       val ev = s.read.schema(schema).parquet(s"$d/events.parquet")
       val onTime = ev.filter(col("event_id") % 10 =!= 0)
-      writeOne(onTime, "events_a_ontime", 0)
+      writeSourceFile(stage, onTime, "events_a_ontime", 0)
       // Eviction runs at the END of the first batch executed UNDER the
       // advanced watermark — late data arriving in that same batch
       // still merges into live state (observed: 0 dropped when the
@@ -800,11 +782,12 @@ object StreamQueries extends QueryModule {
       // marker reuses the on-time max ts in the schema's own native
       // representation (no re-encoding — get(0) passes it through).
       val maxATs = onTime.agg(max(col("ts"))).head().get(0)
-      writeOne(s.createDataFrame(Seq(org.apache.spark.sql
+      writeSourceFile(stage, s.createDataFrame(Seq(org.apache.spark.sql
           .Row(-2L, maxATs, -2L, "marker", 0.0, "{}")).asJava, schema),
         "events_m_marker", 30000)
-      writeOne(ev.filter(col("event_id") % 10 === 0), "events_x_late", 60000)
-      writeOne(s.createDataFrame(Seq(org.apache.spark.sql
+      writeSourceFile(stage, ev.filter(col("event_id") % 10 === 0),
+        "events_x_late", 60000)
+      writeSourceFile(stage, s.createDataFrame(Seq(org.apache.spark.sql
           .Row(-1L, tsValue(tsType(schema), farUs), -1L, "sentinel", 0.0,
             "{}")).asJava, schema),
         "events_zz_sentinel", 120000)
@@ -834,11 +817,6 @@ object StreamQueries extends QueryModule {
               org.apache.spark.sql.types.LongType))))
         .orderBy(col("hour_sec"))
     } finally {
-      prevNanos match {
-        case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       graft.Scratch.deleteTree(ckpt)
       graft.Scratch.deleteTree(stage)
     }
@@ -848,16 +826,9 @@ object StreamQueries extends QueryModule {
       mode: String = "complete", sentinel: Boolean = false,
       filesPerTrigger: Option[Int] = None)(
       build: DataFrame => DataFrame): DataFrame = {
-    val prevNanos = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevCodegen = s.conf.get("spark.sql.codegen.wholeStage", "true")
     val ckpt = graft.Scratch.dir("replay_ckpt_")
-    try {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_REPLAY_PARTS", "4"))
-      s.conf.set("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("GRAFT_REPLAY_CODEGEN", "false"))
+    try Confs.withConfs(s,
+        replayConfs :+ ("spark.sql.codegen.wholeStage" -> "false")) {
       val stage = t("stage") { stagedSource(s, d, copies, sentinel) }
       // ALL staged files land in ONE micro-batch (pinned explicitly so
       // a Spark default change can't silently break it). Non-sentinel
@@ -899,15 +870,7 @@ object StreamQueries extends QueryModule {
         .format("memory").queryName(sink).start() }
       try t("await") { q.awaitTermination() } finally t("stop") { q.stop() }
       s.table(sink)
-    } finally {
-      prevNanos match {
-        case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.codegen.wholeStage", prevCodegen)
-      graft.Scratch.deleteTree(ckpt)
-    }
+    } finally graft.Scratch.deleteTree(ckpt)
   }
 
   def oracle: Map[String, String] = Map(

@@ -7,10 +7,7 @@ package graft
   */
 object PlanPinProbe {
   def main(args: Array[String]): Unit = {
-    val spark = Tables.configure(org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = Tables.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- PlanPinSpec.pinned) {
       val dir = PlanPinSpec.pinDir.getOrElse(n, "/root/testdata/sf0.001")

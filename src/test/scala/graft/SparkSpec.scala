@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test harness: one local SparkSession per suite. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = Tables.configure(SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  lazy val spark: SparkSession = Tables.session("4")
 
   def sf001 = "/root/testdata/sf0.001"
 }
