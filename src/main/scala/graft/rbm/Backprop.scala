@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions.col
   * (`/root/reference/README.md:2` "back propagation") but never
   * implements (SURVEY §7.1 S6; the prop job only ever runs forward).
   * This closes that gap Spark-natively with the same distributed shape
-  * as CD-1 pre-training ([[RBM.cd1Epoch]]): broadcast the weights,
-  * accumulate per-example gradients inside a depth-2 `treeAggregate`
-  * (so the driver receives `O(d·h + h·k)` doubles regardless of row
-  * count — the no-materialized-shuffle property that holds at 100 TB),
-  * update on the driver, loop.
+  * as CD-1 pre-training ([[RBM.cd1Epoch]]): ship the weights in the
+  * task closure, accumulate per-example gradients inside a depth-2
+  * `treeAggregate` (so the driver receives `O(d·h + h·k)` doubles
+  * regardless of row count — the no-materialized-shuffle property that
+  * holds at 100 TB), update on the driver, loop.
   *
   * Network: `x[d] → hidden[h] = σ(x·W1) → logits[k] = hidden·W2 →
   * softmax`, cross-entropy loss. One backward pass updates BOTH the
@@ -155,8 +155,9 @@ object Backprop {
     // the epoch loop reads `rows` only on the treeAggregate path; the
     // deterministic path folds over `canon` (persisted below) and reads
     // `rows` exactly once to build it — caching it there is a pure
-    // storage-write waste (round-15 measurement: q111 is 81 tiny jobs,
-    // fixed per-job cost is the whole query)
+    // storage-write waste (q111 is 81 tiny jobs of min(32, cores)
+    // tasks each — 4 on a 4-core host — and fixed per-job cost is the
+    // whole query)
     if (!cfg.deterministic) rows.persist()
     // depth-2 tree merge only pays once there are enough partitions to
     // bottleneck the driver; below that it just adds a stage to every

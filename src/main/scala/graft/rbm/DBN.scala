@@ -25,26 +25,27 @@ object DBN {
     * `rbmmapper.java:116-119`): floor(σ·255)/255.
     *
     * Pure narrow `Dataset.map` — zero shuffles (the reference burned a
-    * full identity-reduce shuffle per layer here, SURVEY §3.3).
+    * full identity-reduce shuffle per layer here, SURVEY §3.3). The
+    * weights ride in the task closure as a flat row-major array, like
+    * [[RBM.cd1Epoch]]'s.
     */
   def propagate(
       spark: SparkSession,
       data: DataFrame,
       w: DenseMatrix[Double]): DataFrame = {
     import spark.implicits._
-    val bw = spark.sparkContext.broadcast(w)
+    val d = w.rows
+    val h = w.cols
+    val wFlat = RBM.toFlat(w)
     data.select(col("id").cast("long"), col("x"))
       .as[(Long, Array[Double])]
       .map { case (id, x) =>
-        val m = bw.value
-        val d = m.rows
-        val h = m.cols
         val out = new Array[Double](h)
         var j = 0
         while (j < h) {
           var s = 0.0
           var i = 0
-          while (i < d) { s += x(i) * m(i, j); i += 1 }
+          while (i < d) { s += x(i) * wFlat(i * h + j); i += 1 }
           out(j) = math.floor(255.0 / (1.0 + math.exp(-s))) / 255.0
           j += 1
         }
@@ -64,6 +65,7 @@ object DBN {
       epochs: Int,
       seed: Long = 42L): Seq[DenseMatrix[Double]] = {
     var input = data
+    var prev: Option[DataFrame] = None
     val weights = Seq.newBuilder[DenseMatrix[Double]]
     for (layer <- 0 until layerSizes.length - 1) {
       val cfg = RBM.Config(layerSizes(layer), layerSizes(layer + 1),
@@ -71,12 +73,16 @@ object DBN {
       var w = RBM.initWeights(cfg)
       // cache: every epoch re-reads this layer's input (driver.java:90)
       input.persist()
-      for (_ <- 0 until epochs) w = RBM.cd1Epoch(spark, input, w, cfg)
+      if (epochs > 0) w = RBM.cd1Epoch(spark, input, w, cfg)
+      // that epoch filled `input`'s cache from `prev`'s; unpersisting
+      // `prev` any earlier would recompute `input` from the source scan
+      prev.foreach(_.unpersist())
+      for (_ <- 1 until epochs) w = RBM.cd1Epoch(spark, input, w, cfg)
       weights += w
-      val next = propagate(spark, input, w)
-      input.unpersist()
-      input = next
+      prev = Some(input)
+      input = propagate(spark, input, w)
     }
+    prev.foreach(_.unpersist())
     weights.result()
   }
 }

@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions.col
   * reference's column-packed re-read, `matrix.java:40-53`, scrambles
   * the matrix between iterations — a bug we do not replicate).
   *
-  * Execution shape (SURVEY §3.2 Spark translation): broadcast the
-  * weight matrix down, compute the per-example CD-1 gradient inside
-  * `treeAggregate`, and merge partial gradient matrices pairwise —
+  * Execution shape (SURVEY §3.2 Spark translation): ship the weight
+  * matrix down in the task closure, compute the per-example CD-1
+  * gradient inside `treeAggregate`, and merge partial gradient
+  * matrices pairwise —
   * this *fuses* the reference's explode-to-(weightId,delta) flatMap
   * (A8) with its per-key SUM (A9), so no `numCase×d×h`-row shuffle
   * ever materializes. The reference shipped that volume as text KV
@@ -153,7 +154,7 @@ object RBM {
     acc
   }
 
-  /** Row-major flattening helpers for the broadcast/API boundary. */
+  /** Row-major flattening helpers for the closure/API boundary. */
   private[rbm] def toFlat(w: DenseMatrix[Double]): Array[Double] =
     Array.tabulate(w.rows * w.cols)(k => w(k / w.cols, k % w.cols))
   private[rbm] def fromFlat(a: Array[Double], d: Int, h: Int): DenseMatrix[Double] =
@@ -171,9 +172,12 @@ object RBM {
     * `W + ε/numCase · Σ_examples grad` (reference `driver.java:204`).
     *
     * `data` must have columns (`id` long, `x` array&lt;double&gt;).
-    * The weight matrix is broadcast (A3); gradients merge through a
-    * depth-2 treeAggregate so the driver receives `O(d×h)` doubles no
-    * matter how many executors contributed.
+    * The weight matrix ships to the tasks (A3) as a flat array in the
+    * task closure — O(d×h) doubles, serialized once per job into the
+    * task binary Spark already broadcasts, so no explicit broadcast is
+    * created or destroyed per epoch. Gradients merge through a depth-2
+    * treeAggregate so the driver receives `O(d×h)` doubles no matter
+    * how many executors contributed.
     */
   def cd1Epoch(
       spark: SparkSession,
@@ -184,7 +188,7 @@ object RBM {
     import spark.implicits._
     val d = cfg.numdims
     val h = cfg.numhid
-    val bw = spark.sparkContext.broadcast(toFlat(w))
+    val wFlat = toFlat(w)
     val draw = new HashDraw(cfg.seed)
     val rows = data.select(col("id").cast("long"), col("x")).as[(Long, Array[Double])]
     // Buffer slot d*h carries the example count, fusing numCase into
@@ -199,18 +203,17 @@ object RBM {
         Reproducible.canonicalize(rows.rdd, 32), d * h + 1) { (acc, id, x) =>
         require(x.length == d, s"arity ${x.length} != numdims $d")
         acc(d * h) += 1.0
-        accumulateGradient(acc, x, bw.value, d, h, id, draw); ()
+        accumulateGradient(acc, x, wFlat, d, h, id, draw); ()
       }
     } else rows.rdd.treeAggregate(new Array[Double](d * h + 1))(
       seqOp = { case (acc, (id, x)) =>
         require(x.length == d,
           s"arity ${x.length} != numdims $d") // rbmmapper.java:108-114
         acc(d * h) += 1.0
-        accumulateGradient(acc, x, bw.value, d, h, id, draw)
+        accumulateGradient(acc, x, wFlat, d, h, id, draw)
       },
       combOp = (a, b) => { var k = 0; while (k < a.length) { a(k) += b(k); k += 1 }; a },
       depth = 2)
-    bw.destroy()
     val numCase = gradFlat(d * h).toLong
     require(numCase > 0,
       "cd1Epoch on empty input (scale = ε/0 would silently produce NaN weights)")

@@ -33,4 +33,36 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out1/weights_0").count() == 24)
     assert(spark.read.parquet(s"$out1/weights_1").count() == 8)
   }
+
+  test("pretrain reads its source once, matches the uncached " +
+    "cd1Epoch/propagate chain, and leaves no cache behind") {
+    import spark.implicits._
+    val sizes = Seq(6, 4, 3, 2)
+    val epochs = 2
+    val seed = 7L
+    val scanned = spark.sparkContext.longAccumulator("pretrain source rows")
+    // one partition: the default cd1Epoch merges partials in completion
+    // order, so only a single-partition input makes the two bit-equal
+    val src = spark.range(0, 40, 1, 1).map { id =>
+      scanned.add(1)
+      (id, Array.tabulate(6)(c => ((id * 37 + c * 11) % 256) / 255.0))
+    }.toDF("id", "x")
+    // only pretrain's own entries count; earlier suites share the session
+    spark.catalog.clearCache()
+    val stack = DBN.pretrain(spark, src, sizes, epochs, seed)
+    assert(spark.sharedState.cacheManager.isEmpty, "pretrain left a cache entry")
+    // each layer's first epoch must read the previous layer's cache:
+    // one source scan, not one per layer
+    assert(scanned.value == 40L, s"source rows computed: ${scanned.value}")
+
+    var input = src
+    val chain = sizes.sliding(2).zipWithIndex.map { case (Seq(d, h), layer) =>
+      val cfg = RBM.Config(d, h, seed = seed + layer)
+      var w = RBM.initWeights(cfg)
+      for (_ <- 0 until epochs) w = RBM.cd1Epoch(spark, input, w, cfg)
+      input = DBN.propagate(spark, input, w)
+      w
+    }.toSeq
+    assert(stack.map(RBM.toFlat(_).toSeq) == chain.map(RBM.toFlat(_).toSeq))
+  }
 }
