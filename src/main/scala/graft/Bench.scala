@@ -181,7 +181,7 @@ object Bench {
     // launching it from elsewhere must not strand bench_queries.json (or
     // miss BASELINE.md and silently skip the retime pass).
     val repoRoot: java.nio.file.Path = {
-      var p = java.nio.file.Paths.get("").toAbsolutePath
+      val p = java.nio.file.Paths.get("").toAbsolutePath
       var found: Option[java.nio.file.Path] = None
       var cur = p
       while (found.isEmpty && cur != null) {

@@ -75,6 +75,66 @@ object RollingHash {
   }
 }
 
+/** 15-bit Hilbert curve index of a quantized point `(x, y)` in
+  * [0, 32767]² — the layout key of q275. The composed SQL form folds
+  * the classic xy2d loop through `aggregate(sequence(14, 0, -1), …)`,
+  * a HigherOrderFunction: CodegenFallback, so its lambda runs
+  * interpreted per level per row and the whole projection leaves
+  * whole-stage codegen. This is the same loop as one static method
+  * inside codegen; the oracle keeps the packed fold
+  * ([[graft.sources.HilbertSql]]) as its independent twin.
+  */
+case class Hilbert(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = LongType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == LongType && right.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects two bigint arguments, " +
+        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
+
+  override def nullSafeEval(x: Any, y: Any): Any =
+    Hilbert.xy2d(x.asInstanceOf[Long], y.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.Hilbert.xy2d($x, $y)")
+
+  override protected def withNewChildrenInternal(l: Expression,
+      r: Expression): Hilbert = copy(left = l, right = r)
+  override def prettyName: String = "graft_hilbert"
+}
+
+object Hilbert {
+  private final val Bits = 15
+  private final val Max = (1L << Bits) - 1
+
+  /** Shared by interpreted eval and generated code. Wikipedia's xy2d
+    * with the full-grid n−1 rotation, which keeps coordinates
+    * nonnegative at every level; coordinates are masked to 15 bits.
+    * The index lies in [0, 2^30).
+    */
+  def xy2d(x0: Long, y0: Long): Long = {
+    var x = x0 & Max
+    var y = y0 & Max
+    var d = 0L
+    var i = Bits - 1
+    while (i >= 0) {
+      val rx = (x >>> i) & 1L
+      val ry = (y >>> i) & 1L
+      d += (1L << (2 * i)) * ((3L * rx) ^ ry)
+      if (ry == 0L) {
+        if (rx == 1L) { x = Max - x; y = Max - y }
+        val t = x; x = y; y = t
+      }
+      i -= 1
+    }
+    d
+  }
+}
+
 /** Dense-vector dot product over array columns (float or double
   * elements), accumulated in double in ascending index order. What
   * changes versus the composed `aggregate(zip_with(a, b, cast*cast),
@@ -545,6 +605,9 @@ object exprs {
   def graft_jaro_winkler(a: Column, b: Column): Column =
     Bridge.column(JaroWinkler(Cast(Bridge.expression(a), StringType),
       Cast(Bridge.expression(b), StringType)))
+  def graft_hilbert(x: Column, y: Column): Column =
+    Bridge.column(Hilbert(Cast(Bridge.expression(x), LongType),
+      Cast(Bridge.expression(y), LongType)))
 
   /** Spark's internal runtime-filter primitives, surfaced as Column
     * functions: `BloomFilterAggregate` builds the filter (binary),

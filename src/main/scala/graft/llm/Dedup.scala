@@ -956,7 +956,6 @@ object Dedup extends QueryModule {
     // Per iteration the work is one edges⋈ranks join + one dst-keyed
     // sum — shuffle bounded by |edges|, never |docs|².
     "q153_pagerank" -> ((s, d) => {
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 500)
       // a declarative 3-round unroll re-references each round's input
       // twice, doubling the full minhash lineage per round (181 static
       // exchanges) — so this takes q113's action-style shape instead:

@@ -184,22 +184,27 @@ object AdvancedOps extends QueryModule {
     // Array-function suite: construction, sort, slice, set ops,
     // position/membership. Results are string-joined because DuckDB's
     // list_intersect/list_distinct return arbitrary element order —
-    // both engines sort before comparison.
+    // both engines sort before comparison. The array cast applies the
+    // element cast inside codegen; a `transform` lambda would run it
+    // interpreted per element and pull the projection out of codegen.
+    // The rows are sorted on the three key columns before the arrays
+    // are built: the global sort's range-partition sampling pass then
+    // re-reads only the keys, and no array string crosses the shuffle.
     "q61_array_functions" -> ((s, d) => {
       def asStr(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
-      val a = array(col("l_linenumber"), col("l_quantity").cast("int"), lit(7))
+        array_join(c.cast("array<string>"), ",")
+      val qty = col("l_quantity").cast("int")
+      val a = array(col("l_linenumber"), qty, lit(7))
       val b = array(lit(7), col("l_linenumber"))
       Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").cast("int").as("qty"),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), qty)
+        .select(col("l_orderkey"), col("l_linenumber"), qty.as("qty"),
           asStr(sort_array(a)).as("sorted_str"),
           asStr(slice(sort_array(a), 1, 2)).as("slice_str"),
           asStr(sort_array(array_intersect(a, b))).as("inter_str"),
           asStr(sort_array(array_union(a, b))).as("union_str"),
           array_position(a, 7).cast("int").as("pos7"),
           array_contains(a, col("l_linenumber")).as("has_ln"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("qty"))
     }),
 
     // Regexp suite: group extraction, replacement with backreferences

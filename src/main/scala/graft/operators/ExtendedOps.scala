@@ -110,23 +110,37 @@ object ExtendedOps extends QueryModule {
         .orderBy(col("o_orderpriority"))
     }),
 
-    // Value-range window frame (RANGE BETWEEN n PRECEDING) — frame
+    // Value-range window frame: per order, the sum and count over the
+    // orders of its priority priced in [p − 10000, p] — frame
     // membership by value distance, not row offset, so the result is
     // deterministic even under peer-row ties. Partitioned by priority:
     // no global-sort window.
+    //
+    // A sliding RANGE frame re-aggregates the whole frame per row
+    // (O(n·w)). The band is computed instead from three frames Spark
+    // evaluates incrementally (the band-sum identity of the MapReduce
+    // band-join analyses): with T = Σ(q ≥ p − 10000), S = Σ(q ≤ p) and
+    // Total = Σ(all), every q lies in T's set or S's, so
+    // T + S − Total = Σ(p − 10000 ≤ q ≤ p). T's frame is the DESC
+    // order's UNBOUNDED PRECEDING AND 10000 FOLLOWING, whose bound
+    // Spark computes as p + (−10000), the same double as the sliding
+    // frame's lower bound — so prices exactly 10000 apart land the
+    // same way. The sums run in DECIMAL, where the identity is exact
+    // and no association order (running sums here, a segment tree in
+    // the oracle's engine) can change a digit. ExtendedOpsSpec pins
+    // the identity against the sliding frame on adversarial prices.
     "q67_range_frame" -> ((s, d) => {
+      def band(agg: String) =
+        s"""($agg OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC
+           |    RANGE BETWEEN UNBOUNDED PRECEDING AND 10000 FOLLOWING)
+           |  + $agg OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice
+           |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           |  - $agg OVER (PARTITION BY o_orderpriority))""".stripMargin
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),
-          // frame sum through decimal: engines may associate frame
-          // accumulation differently (running vs segment-tree)
-          round(expr("""CAST(sum(CAST(o_totalprice AS DECIMAL(20,4))) OVER (
-              PARTITION BY o_orderpriority ORDER BY o_totalprice
-              RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW) AS DOUBLE)"""), 2)
-            .as("near_sum"),
-          expr("""count(*) OVER (
-              PARTITION BY o_orderpriority ORDER BY o_totalprice
-              RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW)""")
-            .as("near_n"))
+          round(expr(s"CAST(${band("sum(CAST(o_totalprice AS DECIMAL(20,4)))")}" +
+            " AS DOUBLE)"), 2).as("near_sum"),
+          expr(band("count(*)")).as("near_n"))
         .orderBy(col("o_orderkey"))
     }),
 

@@ -1,6 +1,6 @@
 package graft.rbm
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** The fused CD-1 gradient as a first-class typed `Aggregator`

@@ -1,17 +1,20 @@
 package graft.sources
 
-/** Engine-portable SQL for the 15-bit Hilbert xy2d transform and the
-  * matching 15-bit Z-order interleave over pre-quantized `xq`/`yq`
-  * columns (integers in [0, 32767]).
+/** Engine-portable SQL for q275's two layout keys over pre-quantized
+  * `xq`/`yq` columns (integers in [0, 32767]).
   *
-  * The Hilbert fold packs the classic mutable-state loop
-  * (x, y, d — Wikipedia's xy2d with the full-grid n−1 rotation, which
-  * keeps coordinates nonnegative at every level) into ONE BIGINT:
-  * x in bits 0–14, y in bits 15–29, d in bits 30–59 — so the fold is
-  * pure exact-integer arithmetic both engines compute identically.
-  * Spark spells it as `aggregate(sequence(14,0,-1), …)`; DuckDB as
-  * `list_reduce(list_prepend(init, range(14,-1,-1)), …)` (first list
-  * element is the seed). Only shift/xor spellings differ.
+  * `hilbert` is the DuckDB spelling of the 15-bit Hilbert xy2d
+  * transform, the oracle's independent twin of the engine's native
+  * `graft_hilbert` kernel ([[graft.functions.Hilbert]]). It packs the
+  * classic mutable-state loop (x, y, d — Wikipedia's xy2d with the
+  * full-grid n−1 rotation, which keeps coordinates nonnegative at
+  * every level) into ONE BIGINT: x in bits 0–14, y in bits 15–29, d in
+  * bits 30–59 — so the fold is pure exact-integer arithmetic, spelled
+  * as `list_reduce(list_prepend(init, range(14,-1,-1)), …)` (first list
+  * element is the seed).
+  *
+  * `zorder` is the matching 15-bit Z-order interleave in either
+  * engine's spelling; only the shift/xor spellings differ.
   */
 private[graft] object HilbertSql {
 
@@ -19,12 +22,10 @@ private[graft] object HilbertSql {
     if (spark) s"shiftleft($a, $b)" else s"($a << $b)"
   private def shr(spark: Boolean)(a: String, b: String) =
     if (spark) s"shiftright($a, $b)" else s"($a >> $b)"
-  private def xor(spark: Boolean)(a: String, b: String) =
-    if (spark) s"($a ^ $b)" else s"xor($a, $b)"
 
-  /** Hilbert index expression (value in [0, 2^30)). */
-  def hilbert(spark: Boolean): String = {
-    val sl = shl(spark) _; val sr = shr(spark) _; val xo = xor(spark) _
+  /** DuckDB Hilbert index expression (value in [0, 2^30)). */
+  def hilbert: String = {
+    val sl = shl(spark = false) _; val sr = shr(spark = false) _
     val X = "(p & 32767)"
     val Y = s"(${sr("p", "15")} & 32767)"
     val D = sr("p", "30")
@@ -34,15 +35,11 @@ private[graft] object HilbertSql {
       s"THEN 32767 - $Y ELSE $Y END) ELSE $X END)"
     val NY = s"(CASE WHEN $RY = 0 THEN (CASE WHEN $RX = 1 " +
       s"THEN 32767 - $X ELSE $X END) ELSE $Y END)"
-    val ND = s"($D + ${sl("1", "2 * i")} * ${xo(s"(3 * $RX)", RY)})"
+    val ND = s"($D + ${sl("1", "2 * i")} * xor((3 * $RX), $RY))"
     val step = s"$NX + ${sl(NY, "15")} + ${sl(s"($ND)", "30")}"
     val init = s"xq + ${sl("yq", "15")}"
-    if (spark)
-      s"aggregate(sequence(14, 0, -1), cast($init as bigint), " +
-        s"(p, i) -> cast($step as bigint), p -> ${sr("p", "30")})"
-    else
-      s"(list_reduce(list_prepend(CAST($init AS BIGINT), " +
-        s"range(14, -1, -1)), (p, i) -> $step) >> 30)"
+    s"(list_reduce(list_prepend(CAST($init AS BIGINT), " +
+      s"range(14, -1, -1)), (p, i) -> $step) >> 30)"
   }
 
   /** 15-bit Z-order interleave (value in [0, 2^30)). */

@@ -210,7 +210,7 @@ object SnapshotTable {
     * either installs the commit or fails because a racing writer
     * already owns the version. Returns false on a lost race.
     */
-  private def commitManifest(s: SparkSession, t: Path, version: Int,
+  private def commitManifest(t: Path, version: Int,
       rows: Seq[(Int, String, String)]): Boolean = {
     Files.createDirectories(manifestDir(t))
     val tmp = Files.createTempDirectory(t, "commit_tmp_")
@@ -249,7 +249,7 @@ object SnapshotTable {
     * atomic move installs into, so a half-prepared commit (data
     * written, manifest not yet moved) is invisible here too.
     */
-  def currentVersion(s: SparkSession, t: Path): Int = {
+  def currentVersion(t: Path): Int = {
     val listing = Files.list(manifestDir(t))
     try {
       val vs = listing.iterator().asScala.map(_.getFileName.toString)
@@ -266,7 +266,7 @@ object SnapshotTable {
     * dirs that actually materialized (an empty bucket writes no dir
     * and must not enter the manifest).
     */
-  private def writeBuckets(s: SparkSession, t: Path, df: DataFrame,
+  private def writeBuckets(t: Path, df: DataFrame,
       key: String, version: Int, dirName: String): Seq[(Int, String, String)] = {
     val out = dataDir(t).resolve(dirName)
     df.withColumn("__b", bucketOf(key))
@@ -283,10 +283,10 @@ object SnapshotTable {
     p.split("__b=").last.takeWhile(_.isDigit).toInt
 
   /** Create the table at version 0 from `df`, bucketed by `key`. */
-  def init(s: SparkSession, t: Path, df: DataFrame, key: String): Unit = {
+  def init(t: Path, df: DataFrame, key: String): Unit = {
     Files.createDirectories(dataDir(t))
-    val committed = commitManifest(s, t, 0,
-      writeBuckets(s, t, df, key, 0, "v0"))
+    val committed = commitManifest(t, 0,
+      writeBuckets(t, df, key, 0, "v0"))
     require(committed, s"table at $t already initialized")
   }
 
@@ -330,12 +330,12 @@ object SnapshotTable {
     updates.persist()
     var attempt = 0
     while (true) {
-      val base = currentVersion(s, t)
+      val base = currentVersion(t)
       val v = base + 1
       // ≤ NumBuckets values — a bounded collect by construction
       val touched = updates.select(bucketOf(key).cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSet
-      val live = liveFiles(s, t, base)
+      val live = liveFiles(t, base)
       val oldTouched = live.filter(p => touched(bucketOfPath(p)))
       // one job for the whole wave: read every touched bucket, anti-join
       // the update keys (MERGE's replace), union the updates, rewrite
@@ -379,9 +379,9 @@ object SnapshotTable {
       val dirName =
         if (!Files.exists(dataDir(t).resolve(s"v$v"))) s"v$v"
         else s"v$v-r$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-      val adds = writeBuckets(s, t, merged, key, v, dirName)
+      val adds = writeBuckets(t, merged, key, v, dirName)
       onBeforeCommit()
-      if (commitManifest(s, t, v,
+      if (commitManifest(t, v,
           oldTouched.map(p => (v, p, "remove")) ++ adds))
         return v
       // lost the race for v: conflict iff the winner touched any of
@@ -406,7 +406,7 @@ object SnapshotTable {
     * driver metadata work over the cached manifest rows — no Spark
     * job (was one distributed read+collect per call).
     */
-  private def liveFiles(s: SparkSession, t: Path, version: Int): Seq[String] = {
+  private def liveFiles(t: Path, version: Int): Seq[String] = {
     val rows = manifestRows(t).filter(_._1 <= version)
     val removed = rows.collect { case (_, p, "remove") => p }.toSet
     rows.collect { case (_, p, a) if a != "remove" && !removed(p) => p }
@@ -419,7 +419,7 @@ object SnapshotTable {
     * and read as NULL.
     */
   def readAsOf(s: SparkSession, t: Path, version: Int): DataFrame = {
-    val live = liveFiles(s, t, version)
+    val live = liveFiles(t, version)
     readDirs(s, live, unionSchemaOf(s, live))
   }
 
@@ -457,9 +457,9 @@ object SnapshotTable {
     * EXECUTES it. Returns the new version.
     */
   def compact(s: SparkSession, t: Path, key: String): Int = {
-    val base = currentVersion(s, t)
+    val base = currentVersion(t)
     val v = base + 1
-    val live = liveFiles(s, t, base)
+    val live = liveFiles(t, base)
     val all = readDirs(s, live, unionSchemaOf(s, live))
     val out = dataDir(t).resolve(s"v$v")
     // repartition BY the bucket id: one task per bucket → one file per
@@ -474,7 +474,7 @@ object SnapshotTable {
         .filter(_.getFileName.toString.startsWith("__b="))
         .map(p => (v, p.toString, "add")).toSeq.sortBy(_._2)
       finally dirs.close()
-    val committed = commitManifest(s, t, v,
+    val committed = commitManifest(t, v,
       live.map(p => (v, p, "remove")) ++ adds)
     if (!committed) throw new java.util.ConcurrentModificationException(
       s"compact lost version $v to a concurrent commit — re-issue")
@@ -496,11 +496,11 @@ object SnapshotTable {
     * (object-store vacuum uses an age threshold); here the caller
     * coordinates vacuum with writers, which SnapshotSpec documents.
     */
-  def vacuum(s: SparkSession, t: Path, retainFrom: Int = 0): Seq[String] = {
-    val cur = currentVersion(s, t)
+  def vacuum(t: Path, retainFrom: Int = 0): Seq[String] = {
+    val cur = currentVersion(t)
     require(retainFrom <= cur, s"retainFrom $retainFrom > current $cur")
     val keep: Set[String] = (retainFrom to cur)
-      .flatMap(v => liveFiles(s, t, v)).toSet
+      .flatMap(v => liveFiles(t, v)).toSet
     val listing = Files.list(dataDir(t))
     val victims =
       try listing.iterator().asScala.flatMap { gen =>
@@ -525,8 +525,8 @@ object SnapshotTable {
   def changesBetween(s: SparkSession, t: Path, fromV: Int, toV: Int,
       key: String): DataFrame = {
     require(fromV <= toV, s"changesBetween($fromV, $toV): from > to")
-    val liveFrom = liveFiles(s, t, fromV).toSet
-    val liveTo = liveFiles(s, t, toV).toSet
+    val liveFrom = liveFiles(t, fromV).toSet
+    val liveTo = liveFiles(t, toV).toSet
     val oldDirs = (liveFrom -- liveTo).toSeq.sorted
     val newDirs = (liveTo -- liveFrom).toSeq.sorted
     // column set = the name-union across every involved dir, computed

@@ -1,9 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Confs, Par, QueryModule, Scratch, Stage, Tables}
+import graft.functions.exprs.graft_hilbert
 import graft.operators.RelationalCore.{dsum, dsumSql}
 
 /** Text-format source/sink round-trip as a registered query: the
@@ -29,7 +30,7 @@ object SourceQueries extends QueryModule {
   private def snapHistory(s: SparkSession, d: String): java.nio.file.Path =
     Stage.once("snap_hist_", d) { t =>
       val docs = Tables.documents(s, d)
-      SnapshotTable.init(s, t, docs, "doc_id")
+      SnapshotTable.init(t, docs, "doc_id")
       SnapshotTable.merge(s, t, snapWave1(docs), "doc_id")
       SnapshotTable.merge(s, t, snapWave2(docs), "doc_id")
     }
@@ -297,6 +298,11 @@ object SourceQueries extends QueryModule {
         .orderBy(col("quarter"))
     }),
 
+    // Hilbert vs Z-order layout locality: 12 equal key ranges of each
+    // curve over the quantized (partkey, suppkey) grid, scored by the
+    // bounding-box area they span. The Hilbert index is the native
+    // graft_hilbert kernel (one codegen'd loop per row); Z-order is a
+    // plain bit interleave that whole-stage codegen compiles as is.
     "q275_hilbert_layout" -> ((s, d) => {
       val (pmin, pmax) =
         Tables.parquetColumnMinMaxLong(s, d, "lineitem", "l_partkey")
@@ -308,8 +314,8 @@ object SourceQueries extends QueryModule {
           .as("xq"),
         expr(s"(l_suppkey - ${smin}L) * 32767 DIV ${smax - smin + 1}L")
           .as("yq"))
-      def layoutAgg(layout: String, key: String) = base
-        .withColumn("k", expr(key))
+      def layoutAgg(layout: String, key: Column) = base
+        .withColumn("k", key)
         .groupBy(expr("k * 12 DIV 1073741824").as("b"))
         .agg((max(col("px")) - min(col("px")) + 1L).as("dx"),
           (max(col("py")) - min(col("py")) + 1L).as("dy"))
@@ -318,8 +324,8 @@ object SourceQueries extends QueryModule {
           max(col("dx") * col("dy")).as("max_bbox_area"))
         .select(lit(layout).as("layout"), col("n_buckets"),
           col("total_bbox_area"), col("max_bbox_area"))
-      layoutAgg("hilbert", HilbertSql.hilbert(spark = true))
-        .unionByName(layoutAgg("zorder", HilbertSql.zorder(spark = true)))
+      layoutAgg("hilbert", graft_hilbert(col("xq"), col("yq")))
+        .unionByName(layoutAgg("zorder", expr(HilbertSql.zorder(spark = true))))
         .orderBy(col("layout"))
     }),
 
@@ -394,7 +400,7 @@ object SourceQueries extends QueryModule {
       // wave 1 (compaction commit instead of a second merge)
       val t = Stage.once("snap_compact_", d) { t =>
         val docs = Tables.documents(s, d)
-        SnapshotTable.init(s, t, docs, "doc_id")
+        SnapshotTable.init(t, docs, "doc_id")
         SnapshotTable.merge(s, t, snapWave1(docs), "doc_id")
         SnapshotTable.compact(s, t, "doc_id")
       }
@@ -908,11 +914,12 @@ object SourceQueries extends QueryModule {
         |  ROUND(${dsumSql("l_extendedprice")}, 2) AS sum_price
         |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
 
-    // q275: the same packed-BIGINT Hilbert fold (list_reduce with the
-    // seed prepended) and bit interleave — exact integers end to end,
-    // driver min/max recomputed as a scalar CTE
+    // q275: the Hilbert index as a packed-BIGINT fold (list_reduce with
+    // the seed prepended), written independently of the engine's native
+    // graft_hilbert kernel; the same bit interleave — exact integers
+    // end to end, driver min/max recomputed as a scalar CTE
     "q275_hilbert_layout" -> {
-      val hk = HilbertSql.hilbert(spark = false)
+      val hk = HilbertSql.hilbert
       val zk = HilbertSql.zorder(spark = false)
       s"""WITH mm AS (
          |  SELECT MIN(l_partkey) AS pmin, MAX(l_partkey) AS pmax,

@@ -176,6 +176,52 @@ class ExtendedOpsSpec extends SparkSpec {
       "fixture must contain at least one non-trivial component")
   }
 
+  test("q67's growing-frame identity equals the sliding RANGE frame on " +
+    "boundary pairs, peers, nulls, a one-row and a one-frame priority") {
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(67)
+    def cents(hi: Int) = rnd.nextInt(hi * 100) / 100.0
+    // (priority, price): exact 10000.00 gaps (chains and fractional
+    // cents, whose p + (−10000) rounding is the sliding frame's),
+    // peer runs on and off a boundary, and random fill
+    val wide = Seq(100.0, 10100.0, 20100.0, 12345.67, 22345.67, 0.01,
+        10000.01, 5000.5, 5000.5, 5000.5, 15000.5, 15000.5, 25000.49) ++
+      Seq.fill(40)(cents(60000)).flatMap(p => Seq(p, p + 10000.0)) ++
+      Seq.fill(100)(cents(60000))
+    val rows: Seq[(String, java.lang.Double)] =
+      wide.map(p => ("1-URGENT", Double.box(p))) ++
+      Seq[java.lang.Double](300.0, null, 10300.0, null, 300.0)
+        .map(p => ("2-HIGH", p)) ++
+      Seq(1000.0, 2000.0, 2000.0, 5000.25, 10999.99)
+        .map(p => ("3-MEDIUM", Double.box(p))) ++ // one frame
+      Seq(("5-LOW", Double.box(777.77))) // one row
+    val schema = StructType(Seq(StructField("o_orderkey", LongType),
+      StructField("o_orderpriority", StringType),
+      StructField("o_totalprice", DoubleType)))
+    val data = rnd.shuffle(rows).zipWithIndex.map { case ((prio, p), i) =>
+      Row(i.toLong + 1, prio, p)
+    }
+    val dir = graft.Scratch.dir("q67_identity_")
+    try {
+      spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
+        .write.parquet(s"$dir/orders.parquet")
+      val got = ExtendedOps.queries("q67_range_frame")(spark, dir.toString)
+        .collect()
+      spark.read.parquet(s"$dir/orders.parquet").createOrReplaceTempView("o67")
+      val sliding = spark.sql(
+        """SELECT o_orderkey, o_orderpriority,
+          |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) OVER w
+          |    AS DOUBLE), 2) AS near_sum,
+          |  COUNT(*) OVER w AS near_n
+          |FROM o67
+          |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice
+          |  RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW)
+          |ORDER BY o_orderkey""".stripMargin).collect()
+      assert(got.length == data.length)
+      got.zip(sliding).foreach { case (g, w) => assert(g == w, s"$g vs $w") }
+    } finally graft.Scratch.deleteTree(dir)
+  }
+
   test("q65 stats: sample and population variance relate by n/(n-1)") {
     val out = ExtendedOps.queries("q65_stats_agg")(spark, sf001).collect()
     out.foreach { r =>

@@ -2,11 +2,12 @@ package graft.sources
 
 import graft.SparkSpec
 
-/** q275's math gate — what the DuckDB oracle can't say (it runs the
-  * SAME packed fold): that the fold actually computes the Hilbert
-  * curve. Pins the Spark expression against an independent mutable
-  * Scala xy2d, the defining adjacency property on a full small grid,
-  * and the locality claim the query exists to measure.
+/** q275's math gate — what the DuckDB oracle can't say (it runs a
+  * packed SQL fold of the same loop): that the index actually is the
+  * Hilbert curve. Pins the native `graft_hilbert` kernel, interpreted
+  * and codegen'd, against an independent mutable Scala xy2d, the
+  * defining adjacency property on a full small grid, and the locality
+  * claim the query exists to measure.
   */
 class HilbertSpec extends SparkSpec {
 
@@ -28,19 +29,30 @@ class HilbertSpec extends SparkSpec {
     d
   }
 
-  test("the packed-BIGINT fold equals an independent Scala xy2d on " +
-    "randomized 15-bit coordinates and the four corners") {
+  test("graft_hilbert, interpreted and codegen'd, equals an independent " +
+    "Scala xy2d on randomized 15-bit coordinates and the four corners") {
+    import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(275)
     val pts = Seq.fill(500)(
       (rnd.nextInt(32768).toLong, rnd.nextInt(32768).toLong)) ++
       Seq((0L, 0L), (32767L, 32767L), (0L, 32767L), (32767L, 0L))
     import spark.implicits._
-    val rows = pts.toDF("xq", "yq")
-      .selectExpr("xq", "yq", HilbertSql.hilbert(spark = true) + " AS k")
-      .collect()
-    rows.foreach { r =>
-      val (x, y) = (r.getAs[Long]("xq"), r.getAs[Long]("yq"))
-      assert(r.getAs[Long]("k") == ref(15)(x, y), s"xy2d($x,$y)")
+    // an RDD source, so the optimizer cannot fold the projection into
+    // a local relation and the executor's projection evaluates it
+    val df = spark.sparkContext.parallelize(pts, 2).toDF("xq", "yq")
+      .select(col("xq"), col("yq"),
+        graft.functions.exprs.graft_hilbert(col("xq"), col("yq")).as("k"))
+    for ((wholeStage, factory) <- Seq("false" -> "NO_CODEGEN",
+        "true" -> "CODEGEN_ONLY")) {
+      val rows = graft.Confs.withConfs(spark, Seq(
+          "spark.sql.codegen.wholeStage" -> wholeStage,
+          "spark.sql.codegen.factoryMode" -> factory)) { df.collect() }
+      assert(rows.length == pts.length)
+      rows.foreach { r =>
+        val (x, y) = (r.getAs[Long]("xq"), r.getAs[Long]("yq"))
+        assert(r.getAs[Long]("k") == ref(15)(x, y),
+          s"xy2d($x,$y) with factoryMode=$factory")
+      }
     }
   }
 

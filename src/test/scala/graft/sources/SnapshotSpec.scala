@@ -18,7 +18,7 @@ class SnapshotSpec extends SparkSpec {
     val df = (0L until 64L)
       .map(i => (i, s"text number $i", i * 10))
       .toDF("id", "text", "score")
-    SnapshotTable.init(spark, t, df, "id")
+    SnapshotTable.init(t, df, "id")
     (t, df)
   }
 
@@ -71,7 +71,7 @@ class SnapshotSpec extends SparkSpec {
     try {
       val df = (0L until 64L).filter(_ % 8 != 5)
         .map(i => (i, s"text $i", i)).toDF("id", "text", "score")
-      SnapshotTable.init(spark, t, df, "id")
+      SnapshotTable.init(t, df, "id")
       val ins = Seq((5L, "five", 1L), (13L, "thirteen", 2L))
         .toDF("id", "text", "score")
       val v1 = SnapshotTable.merge(spark, t, ins, "id")
@@ -196,7 +196,7 @@ class SnapshotSpec extends SparkSpec {
       } finally SnapshotTable.onBeforeCommit = () => ()
       // the winner's commit is intact; the loser changed nothing
       val v3 = SnapshotTable.readAsOf(spark, t,
-        SnapshotTable.currentVersion(spark, t))
+        SnapshotTable.currentVersion(t))
       assert(v3.filter(col("id") === 8).select("text").head().getString(0)
         == "B wins eight")
       assert(v3.filter(col("id") === 0).select("text").head().getString(0)
@@ -215,7 +215,7 @@ class SnapshotSpec extends SparkSpec {
       // files at init (multiple tasks write into the same bucket dir)
       val df = (0L until 256L).map(i => (i, s"text $i", i)).toDF("id", "text", "score")
         .repartition(8)
-      SnapshotTable.init(spark, t, df, "id")
+      SnapshotTable.init(t, df, "id")
       val before = SnapshotTable.readAsOf(spark, t, 0)
       val filesBefore = before.inputFiles.length
       assert(filesBefore > SnapshotTable.NumBuckets,
@@ -234,7 +234,7 @@ class SnapshotSpec extends SparkSpec {
       assert(after.collect().map(_.toSeq).toSet == content0)
       assert(SnapshotTable.readAsOf(spark, t, 0).count() == 256)
       // vacuum with the post-compact horizon frees the fragmented gen
-      val gone = SnapshotTable.vacuum(spark, t, retainFrom = 1)
+      val gone = SnapshotTable.vacuum(t, retainFrom = 1)
       assert(gone.nonEmpty)
       assert(SnapshotTable.readAsOf(spark, t, 1).collect()
         .map(_.toSeq).toSet == content0)
@@ -256,12 +256,12 @@ class SnapshotSpec extends SparkSpec {
       try SnapshotTable.merge(spark, t,
         Seq((0L, "zero v2", 9L)).toDF("id", "text", "score"), "id")
       finally SnapshotTable.onBeforeCommit = () => ()
-      assert(SnapshotTable.currentVersion(spark, t) == 2)
+      assert(SnapshotTable.currentVersion(t) == 2)
       val before = SnapshotTable.readAsOf(spark, t, 2).collect()
         .map(_.toSeq).toSet
       // full-history vacuum: only the orphan goes; every version of
       // the manifest stays readable afterwards
-      val gone = SnapshotTable.vacuum(spark, t)
+      val gone = SnapshotTable.vacuum(t)
       assert(gone.nonEmpty, "expected the lost race's orphan dir")
       val manifestPaths = SnapshotTable.manifest(spark, t)
         .select("path").collect().map(_.getString(0)).toSet
@@ -272,7 +272,7 @@ class SnapshotSpec extends SparkSpec {
         .map(_.toSeq).toSet == before)
       // retention horizon 2: v0's superseded bucket-0/bucket-3 states
       // are freed; v2 still reads exactly as before
-      val expired = SnapshotTable.vacuum(spark, t, retainFrom = 2)
+      val expired = SnapshotTable.vacuum(t, retainFrom = 2)
       assert(expired.nonEmpty, "expected pre-horizon COW dirs to free")
       assert(SnapshotTable.readAsOf(spark, t, 2).collect()
         .map(_.toSeq).toSet == before)
@@ -345,7 +345,7 @@ class SnapshotSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("type changed"))
       // the table is untouched: still at version 0 with original rows
-      assert(SnapshotTable.currentVersion(spark, t) == 0)
+      assert(SnapshotTable.currentVersion(t) == 0)
       assert(SnapshotTable.readAsOf(spark, t, 0)
         .filter(col("id") === 0).select("text").head().getString(0)
         == "text number 0")
@@ -380,7 +380,7 @@ class SnapshotSpec extends SparkSpec {
         == "five v2")
       assert(v2.filter(col("id") =!= 5)
         .exceptAll(v1.filter(col("id") =!= 5)).count() == 0)
-      assert(SnapshotTable.currentVersion(spark, t) == 2)
+      assert(SnapshotTable.currentVersion(t) == 2)
     } finally graft.Scratch.deleteTree(t)
   }
 }
