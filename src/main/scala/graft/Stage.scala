@@ -61,12 +61,13 @@ object Stage {
   }
 
   /** [[once]] for a DataFrame artifact: `df` is written as parquet on
-    * the first call and every call scans the staged file.
+    * the first call and every call scans the staged file, through
+    * [[Tables.parquet]]'s schema cache.
     */
   def parquet(s: SparkSession, prefix: String, key: Any)(
       df: => DataFrame): DataFrame = {
     val file = "staged.parquet"
     val dir = once(prefix, key)(d => df.write.parquet(d.resolve(file).toString))
-    s.read.parquet(dir.resolve(file).toString)
+    Tables.parquet(s, dir.resolve(file).toString)
   }
 }

@@ -272,24 +272,28 @@ object ExtendedOps extends QueryModule {
     // continuous column can land ulp-close to a rounding boundary
     // where the engines' (formula-different) interpolations round to
     // different cents, while integer inputs keep every interpolated
-    // value far from one.
+    // value far from one. Each column gets ONE aggregate buffer that
+    // answers both percentages (an array of percentages), not one
+    // buffer per percentage: 3 buffers instead of 6, each fed every row.
     "q90_approx_percentile" -> ((s, d) => {
+      def within5pct(i: Int) =
+        abs(col("approx")(i) - col("price")(i)) <= col("price")(i) * 0.05
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
-          round(expr("percentile(l_quantity, 0.5)"), 2).as("p50_exact"),
-          round(expr("percentile(l_quantity, 0.9)"), 2).as("p90_exact"),
+          expr("percentile(l_quantity, array(0.5, 0.9))").as("qty"),
           // the sketch bounds stay on the continuous high-cardinality
           // price column (the boolean 5% slack is ulp-robust; only the
           // rounded exact columns needed the integer swap) — on the
           // ~50-value quantity column the sketch would degenerate to
           // exact counting and the bound could never fail
-          (abs(expr("percentile_approx(l_extendedprice, 0.5, 1000)") -
-            expr("percentile(l_extendedprice, 0.5)")) <=
-            expr("percentile(l_extendedprice, 0.5)") * 0.05).as("p50_ok"),
-          (abs(expr("percentile_approx(l_extendedprice, 0.9, 1000)") -
-            expr("percentile(l_extendedprice, 0.9)")) <=
-            expr("percentile(l_extendedprice, 0.9)") * 0.05).as("p90_ok"))
+          expr("percentile(l_extendedprice, array(0.5, 0.9))").as("price"),
+          expr("percentile_approx(l_extendedprice, array(0.5, 0.9), 1000)")
+            .as("approx"))
+        .select(col("l_returnflag"),
+          round(col("qty")(0), 2).as("p50_exact"),
+          round(col("qty")(1), 2).as("p90_exact"),
+          within5pct(0).as("p50_ok"), within5pct(1).as("p90_ok"))
         .orderBy(col("l_returnflag"))
     }),
 

@@ -79,31 +79,10 @@ object SnapshotTable {
     * full job launch per [[liveFiles]] call — q363/q364/q373 each
     * paid ~8-10 such jobs per run (guide §5: the driver should do no
     * DATA work; this is metadata work, exactly what belongs there).
+    * Entries are capped by [[graft.Tables.bounded]].
     */
   private val manifestFileCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String)]]()
-
-  /** Driver-cache entry cap (round-15, VERDICT r14 #4): both caches
-    * key on per-run scratch paths, but a long-lived session serving
-    * many tables would otherwise grow them monotonically — a slow
-    * driver leak. On overflow the cache is simply cleared: entries are
-    * tiny immutable metadata whose re-read costs one driver-side
-    * footer/column pass, so eviction precision buys nothing.
-    */
-  private val CacheCap = 4096
-
-  private def bounded[K, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V]): Unit =
-    if (m.size > CacheCap) m.clear()
-
-  /** Schema per DATA GENERATION dir, cached driver-side: bucket dirs
-    * are copy-on-write (never mutated after commit), so one footer
-    * read per dir serves every later read. Replaces the per-read
-    * `mergeSchema` option, whose footer-merge pass launched a
-    * distributed job for EVERY readAsOf/changesBetween call.
-    */
-  private val dirSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   private val manifestSchema =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
@@ -157,7 +136,7 @@ object SnapshotTable {
       try listing.iterator().asScala.map(_.toString)
         .filter(n => n.endsWith(".parquet")).toSeq.sorted
       finally listing.close()
-    bounded(manifestFileCache)
+    graft.Tables.bounded(manifestFileCache)
     files.flatMap(f =>
       manifestFileCache.computeIfAbsent(f, readManifestFile))
   }
@@ -165,16 +144,14 @@ object SnapshotTable {
   /** Name-union schema over generation dirs, all fields nullable (a
     * column absent from an earlier generation reads NULL there). Types
     * never change across generations in this format — evolution only
-    * ADDS columns — so name-union is total.
+    * ADDS columns — so name-union is total. Bucket dirs are copy-on-
+    * write, so [[graft.Tables.schemaOf]] infers each dir's schema once
+    * and serves every later read from its cache; this replaces the
+    * per-read `mergeSchema` option, whose footer-merge pass launched a
+    * distributed job for EVERY readAsOf/changesBetween call.
     */
   private def unionSchemaOf(s: SparkSession, dirs: Seq[String]): StructType = {
-    bounded(dirSchemaCache)
-    val schemas = dirs.map(dir => Option(dirSchemaCache.get(dir)).getOrElse {
-      // inferred outside the map's bin locks: inference runs a Spark job
-      val schema = s.read.parquet(dir).schema
-      dirSchemaCache.put(dir, schema)
-      schema
-    })
+    val schemas = dirs.map(graft.Tables.schemaOf(s, _))
     StructType(schemas.foldLeft(Seq.empty[org.apache.spark.sql.types.StructField]) {
       (acc, sc) =>
         acc ++ sc.fields.filterNot(f => acc.exists(_.name == f.name))

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{Confs, QueryModule, Stage}
+import graft.{Confs, QueryModule, Stage, Tables}
 import graft.operators.RelationalCore.{dsum, dsumSql}
 
 /** q46 — the streaming engine replaying the batch `events` fixture
@@ -29,15 +29,8 @@ object StreamQueries extends QueryModule {
     * type the generator chose (ns-as-long, µs TIMESTAMP, or µs NTZ —
     * the same trichotomy as [[graft.Tables.tsToUs]]).
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   private def eventsSchema(s: SparkSession, d: String): StructType =
-    Option(schemaCache.get(d)).getOrElse {
-      // inferred outside the map's bin locks: inference runs a Spark job
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      schemaCache.put(d, schema)
-      schema
-    }
+    Tables.schemaOf(s, s"$d/events.parquet")
 
   private def tsType(schema: StructType): DataType = schema("ts").dataType
 
@@ -770,7 +763,7 @@ object StreamQueries extends QueryModule {
     try Confs.withConfs(s, replayConfs) {
       import scala.jdk.CollectionConverters._
       val schema = eventsSchema(s, d)
-      val ev = s.read.schema(schema).parquet(s"$d/events.parquet")
+      val ev = Tables.events(s, d)
       val onTime = ev.filter(col("event_id") % 10 =!= 0)
       writeSourceFile(stage, onTime, "events_a_ontime", 0)
       // Eviction runs at the END of the first batch executed UNDER the
