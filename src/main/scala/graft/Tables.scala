@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -76,14 +76,19 @@ object Tables {
     *  - Inputs are write-once: the fixtures are read-only, staged dirs,
     *    snapshot generations and the events fixture are never rewritten.
     *    A path rewritten in place gets a new key, so it is inferred again.
-    *  - Inference runs outside any map lock, because it is a Spark job;
-    *    two first readers of one key may both infer, with equal results.
+    *  - Inference runs outside any map lock, because it is a Spark job.
+    *    The first reader of a key infers; readers of the same key that
+    *    miss meanwhile wait for its result (the q000 staging chains read
+    *    one staged table from two threads). A failed inference leaves
+    *    no entry, and its waiters throw its failure.
     *  - Entries are capped by [[bounded]].
     * A path read once (a fresh scratch dir) gains nothing from the cache
     * and is read with a plain `read.parquet`.
     */
-  private val schemaCache =
-    new ConcurrentHashMap[(String, Long, Long, Map[String, String]), StructType]()
+  private type SchemaKey = (String, Long, Long, Map[String, String])
+  private val schemaCache = new ConcurrentHashMap[SchemaKey, StructType]()
+  /** The inference running for a key, while it runs. */
+  private val inferring = new ConcurrentHashMap[SchemaKey, CompletableFuture[StructType]]()
 
   /** `path` (one file or directory, not a glob) as parquet, scanned
     * under its cached schema: only the first read of an unchanged path
@@ -107,10 +112,22 @@ object Tables {
     val hit = schemaCache.get(key)
     if (hit != null) hit
     else {
-      val schema = s.read.parquet(path).schema
-      bounded(schemaCache)
-      schemaCache.put(key, schema)
-      schema
+      val mine = new CompletableFuture[StructType]()
+      val first = inferring.putIfAbsent(key, mine)
+      if (first != null)
+        try first.join()
+        catch { case e: CompletionException => throw e.getCause }
+      else try {
+        // an inference that finished between the miss and the
+        // putIfAbsent has already filled the cache
+        val schema = Option(schemaCache.get(key))
+          .getOrElse(s.read.parquet(path).schema)
+        bounded(schemaCache)
+        schemaCache.put(key, schema)
+        mine.complete(schema)
+        schema
+      } catch { case e: Throwable => mine.completeExceptionally(e); throw e }
+      finally inferring.remove(key, mine)
     }
   }
 
@@ -196,6 +213,25 @@ object Tables {
     */
   def parquetRowCount(s: SparkSession, d: String, name: String): Long =
     withParquetFooters(s, s"$d/$name.parquet")(_.getRecordCount).sum
+
+  /** [[parquetRowCount]] of `df`, which must be a bare parquet scan (a
+    * [[parquet]] read, a [[Stage.parquet]] table): the footers of the
+    * files it scans, read on every call, and no Spark job.
+    */
+  def parquetRowCount(s: SparkSession, df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val files = df.queryExecution.analyzed match {
+      case lr: LogicalRelation => lr.relation match {
+        case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          r.location.inputFiles
+        case r => throw new IllegalArgumentException(s"not a bare parquet scan: $r")
+      }
+      case p => throw new IllegalArgumentException(
+        s"not a bare parquet scan: ${p.nodeName}")
+    }
+    files.toSeq.flatMap(withParquetFooters(s, _)(_.getRecordCount)).sum
+  }
 
   /** Exact global [min, max] of an integral column from parquet FOOTER
     * statistics — same no-data-pass contract as [[parquetRowCount]]

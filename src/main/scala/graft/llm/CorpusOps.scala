@@ -156,8 +156,8 @@ object CorpusOps extends QueryModule {
     // summary posture of q114's HLL; the set algebra then runs
     // entirely on the driver's three summaries. Correctness gate
     // (q114's bounded-error twin
-    // pattern): each exact cardinality — computed here via DataFrame
-    // set ops so DuckDB can twin it — must land inside the sketch's
+    // pattern): each exact cardinality — counted in the sketches' own
+    // pass, twinned by DuckDB's set operators — must land inside the sketch's
     // OWN 3-standard-deviation interval, the estimator's published
     // guarantee (deterministic per fixture: theta's hash seed is
     // fixed, and a theta set is order-independent). Below k the
@@ -169,33 +169,33 @@ object CorpusOps extends QueryModule {
       import graft.functions.exprs.graft_theta_sketch_agg
       import s.implicits._
       val nom = 4096
-      def h = TextAnalysis.md5Int(concat(lit("theta:"), col("text")))
-      def snap(mod: Int) = Tables.documents(s, d)
-        .filter(col("doc_id") % mod =!= 0).select(h.as("h"))
-      def sketchOf(df: DataFrame): Sketch = {
-        val bytes = df.agg(graft_theta_sketch_agg(col("h"), nom).as("sk"))
-          .head().getAs[Array[Byte]]("sk")
-        Sketches.wrapSketch(Memory.wrap(bytes))
-      }
-      // the 3 sketch builds and 3 exact set-op counts are six
-      // INDEPENDENT driver actions — overlapped from a small pool
-      // (guide §2.6, the q000 staging shape) so each tiny job's tail
-      // back-fills the cores; per-job work and results are unchanged
-      val (sa, sb, sc, exact) = graft.Par.scope(s, 4) { p =>
-        val fa = p.fork("q215: sketch a")(sketchOf(snap(3)))
-        val fb = p.fork("q215: sketch b")(sketchOf(snap(4)))
-        val fc = p.fork("q215: sketch c")(sketchOf(snap(5)))
-        def da = snap(3).distinct()
-        def db = snap(4).distinct()
-        def dc = snap(5).distinct()
-        val fu = p.fork("q215: exact union")(da.union(db).union(dc).distinct().count())
-        val fi = p.fork("q215: exact intersect")(da.intersect(db).count())
-        val fm = p.fork("q215: exact minus")(da.except(db).count())
-        (fa.join(), fb.join(), fc.join(), Map[String, Long](
-          "a_union_b_union_c" -> fu.join(),
-          "a_intersect_b" -> fi.join(),
-          "a_minus_b" -> fm.join()))
-      }
+      // snapshot X = docs with doc_id % mod ≠ 0; a null doc_id is in none
+      def in(mod: Int) = coalesce(col("doc_id") % mod =!= 0, lit(false))
+      // ONE round for all six answers: one scan hashes each text once
+      // and flags its snapshots; groupBy(h) turns row flags into SET
+      // membership (a text under several doc_ids is in A if any of
+      // them is — a flag test before this group would count rows, not
+      // hashes); one global aggregate then builds the three sketches
+      // (when(flag, h) is null off the snapshot, and the sketch skips
+      // nulls) and the three exact counts. A null text is one null
+      // hash: a member of each exact set, as under Spark's and DuckDB's
+      // set operators, and skipped by the sketches as before.
+      val byHash = Tables.documents(s, d)
+        .select(TextAnalysis.md5Int(concat(lit("theta:"), col("text"))).as("h"),
+          in(3).as("a"), in(4).as("b"), in(5).as("c"))
+        .filter(col("a") || col("b") || col("c"))
+        .groupBy(col("h"))
+        .agg(max(col("a")).as("a"), max(col("b")).as("b"), max(col("c")).as("c"))
+      def sketchAgg(x: String) = graft_theta_sketch_agg(when(col(x), col("h")), nom)
+      val r = byHash.agg(sketchAgg("a").as("sa"), sketchAgg("b").as("sb"),
+          sketchAgg("c").as("sc"),
+          count(lit(1)).as("a_union_b_union_c"),
+          count(when(col("a") && col("b"), 1)).as("a_intersect_b"),
+          count(when(col("a") && !col("b"), 1)).as("a_minus_b"))
+        .head()
+      def sketch(c: String): Sketch =
+        Sketches.wrapSketch(Memory.wrap(r.getAs[Array[Byte]](c)))
+      val (sa, sb, sc) = (sketch("sa"), sketch("sb"), sketch("sc"))
       val union3 = {
         val u = SetOperation.builder().setNominalEntries(nom).buildUnion()
         u.union(sa); u.union(sb); u.union(sc); u.getResult
@@ -206,16 +206,16 @@ object CorpusOps extends QueryModule {
         i.intersect(sa); i.intersect(sb); i.getResult
       }
       val aNotB = SetOperation.builder().buildANotB().aNotB(sa, sb)
-      val ests: Map[String, Sketch] = Map(
-        "a_union_b_union_c" -> union3,
+      // rows in op order, so the 3-row result needs no sort job
+      val rows = Seq(
         "a_intersect_b" -> interAb,
-        "a_minus_b" -> aNotB)
-      val rows = ests.keys.toSeq.sorted.map { op =>
-        val sk = ests(op); val ex = exact(op)
+        "a_minus_b" -> aNotB,
+        "a_union_b_union_c" -> union3).map { case (op, sk) =>
+        val ex = r.getAs[Long](op)
         (op, ex,
           sk.getLowerBound(3) <= ex.toDouble && ex.toDouble <= sk.getUpperBound(3))
       }
-      rows.toDF("op", "n_exact", "exact_within_bounds").orderBy("op")
+      rows.toDF("op", "n_exact", "exact_within_bounds")
     }),
 
     // Mergeable quantile sketch (KLL) — the distribution-summary leg

@@ -499,22 +499,25 @@ object Dedup extends QueryModule {
       // outputs (and the oracle'd counts) are identical however the
       // scheduler interleaves the jobs. Chains are submitted
       // longest-first so FIFO scheduling fills the tail with the
-      // shorter chains.
-      val tasks: Seq[(String, () => Long)] = Seq(
-        "pairs09" -> (() => prefixJaccardPairs(s, d, "0.9").count()),
-        "comp" -> (() => componentsStaged(s, d).count()),
-        "partsupp" -> (() =>
-          graft.operators.PartSupp.partsupp(s, d).count()),
-        "pairs07" -> (() => prefixJaccardPairs(s, d, "0.7").count()),
-        "edges" -> (() => edgesStaged(s, d).count()),
-        "bands" -> (() => bandsStaged(s, d).count()),
-        "srt" -> (() => dfSortedSetsStaged(s, d).count()))
+      // shorter chains. Each staged table is counted from its parquet
+      // footers, read on every call: once the tables are staged, a
+      // call runs no job, and its rows are built in tbl order so the
+      // result needs no sort job either.
+      val tasks: Seq[(String, () => DataFrame)] = Seq(
+        "pairs09" -> (() => prefixJaccardPairs(s, d, "0.9")),
+        "comp" -> (() => componentsStaged(s, d)),
+        "partsupp" -> (() => graft.operators.PartSupp.partsupp(s, d)),
+        "pairs07" -> (() => prefixJaccardPairs(s, d, "0.7")),
+        "edges" -> (() => edgesStaged(s, d)),
+        "bands" -> (() => bandsStaged(s, d)),
+        "srt" -> (() => dfSortedSetsStaged(s, d)))
       val counts = graft.Par.scope(s, 3) { p =>
-        tasks.map { case (name, job) => name -> p.fork(s"staging: $name")(job()) }
-          .map { case (name, f) => name -> f.join() }
+        tasks.map { case (name, table) =>
+          name -> p.fork(s"staging: $name")(Tables.parquetRowCount(s, table()))
+        }.map { case (name, f) => name -> f.join() }
       }
       import s.implicits._
-      counts.toDF("tbl", "n_rows").orderBy(col("tbl"))
+      counts.sortBy(_._1).toDF("tbl", "n_rows")
     }),
 
     // Exact dedup: md5 content hash → cluster size per doc (hash
@@ -1442,6 +1445,8 @@ object Dedup extends QueryModule {
         """concat(substring(c_name, 1, length(c_name)-1),
           |  cast((cast(substring(c_name, length(c_name), 1) AS INT) + 1)
           |       % 10 AS STRING))""".stripMargin)
+      val bSeg = when(col("c_custkey") % 11 === 0, lit("UNKNOWN"))
+        .otherwise(col("c_mktsegment"))
       val a = c.select(col("c_custkey").as("a_key"),
         col("c_name").as("a_name"), col("c_nationkey").as("a_nat"),
         col("c_acctbal").as("a_bal"), col("c_mktsegment").as("a_seg"))
@@ -1451,8 +1456,7 @@ object Dedup extends QueryModule {
         col("c_nationkey").as("b_nat"),
         when(col("c_custkey") % 5 === 0, round(col("c_acctbal"), 0))
           .otherwise(col("c_acctbal")).as("b_bal"),
-        when(col("c_custkey") % 11 === 0, lit("UNKNOWN"))
-          .otherwise(col("c_mktsegment")).as("b_seg"))
+        bSeg.as("b_seg"))
       def delKeys(nameCol: String) = expr(
         s"""array_union(array($nameCol),
            |  transform(sequence(1, length($nameCol)),
@@ -1484,11 +1488,11 @@ object Dedup extends QueryModule {
             floor(col("b_bal")).cast("long").as("fb")),
           col("an2") === col("bn2") && col("fa") === col("fb") + col("off"))
         .filter(bAgree)
-      // the four per-margin aggregates below (name cells, balance
-      // margin, segment margin, nation totals) are independent driver
-      // actions — overlapped from a small pool (guide §2.6, the
-      // q000/q215 shape); each job and its result are unchanged
-      val (nCells, bRow, aS, nTot) = graft.Par.scope(s, 4) { p =>
+      // the three aggregates below (name cells, balance margin,
+      // nation-segment counts) read different inputs and are
+      // independent driver actions — overlapped from a small pool
+      // (guide §2.6, the q000 staging shape)
+      val (nCells, bRow, segs) = graft.Par.scope(s, 3) { p =>
         val fCells = p.fork("q259: name cells")(nameCand
           .join(a, "a_key").join(b, "b_key")
           .filter(levenshtein(col("a_name"), col("b_name")) <= 1)
@@ -1502,19 +1506,26 @@ object Dedup extends QueryModule {
         val fBRow = p.fork("q259: balance margin")(balCand
           .agg(count(lit(1)).as("ab"),
             sum(when(sAgree, 1L).otherwise(0L)).as("abs_")).head())
-        // (3) segment-agree margin by pure count algebra; nation totals
-        val fAS = p.fork("q259: segment margin")(a
-          .groupBy(col("a_nat"), col("a_seg")).agg(count(lit(1)).as("ca"))
-          .join(b.groupBy(col("b_nat"), col("b_seg")).agg(count(lit(1)).as("cb")),
-            col("a_nat") === col("b_nat") && col("a_seg") === col("b_seg"))
-          .agg(sum(col("ca") * col("cb"))).head().getLong(0))
-        val fNTot = p.fork("q259: nation totals")(a
-          .groupBy(col("a_nat")).agg(count(lit(1)).as("ca"))
-          .join(b.groupBy(col("b_nat")).agg(count(lit(1)).as("cb")),
-            col("a_nat") === col("b_nat"))
-          .agg(sum(col("ca") * col("cb"))).head().getLong(0))
-        (fCells.join(), fBRow.join(), fAS.join(), fNTot.join())
+        // (3) one count per (nation, a_seg, b_seg): ≤ 25 × 5 × 2 rows,
+        // from which the driver derives both per-side margins below
+        val fSegs = p.fork("q259: nation-segment counts")(c
+          .filter(col("c_nationkey").isNotNull)
+          .groupBy(col("c_nationkey"), col("c_mktsegment"), bSeg)
+          .agg(count(lit(1)))
+          .collect().toSeq
+          .map(r => (r.get(0), Option(r.getString(1)), Option(r.getString(2)),
+            r.getLong(3))))
+        (fCells.join(), fBRow.join(), fSegs.join())
       }
+      // segment-agree margin Σ ca·cb over equal (nation, segment) keys
+      // and nation totals Σ na·nb (na = nb: both sides are customer) —
+      // the two equi-join counts; a null segment agrees with nothing
+      val ca = segs.collect { case (nat, Some(sa), _, n) => (nat, sa) -> n }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      val cb = segs.collect { case (nat, _, Some(sb), n) => (nat, sb) -> n }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      val aS = ca.map { case (k, n) => n * cb.getOrElse(k, 0L) }.sum
+      val nTot = segs.groupMapReduce(_._1)(_._4)(_ + _).values.map(n => n * n).sum
       val aB = bRow.getAs[Long]("ab"); val aBS = bRow.getAs[Long]("abs_")
       def nCell(ba: Boolean, sa: Boolean) =
         nCells.getOrElse((ba, sa), (0L, 0L))

@@ -755,7 +755,7 @@ object StatsOps extends QueryModule {
         // the two variables' rank builds are independent multi-job
         // pipelines (min/max head + bucket-count collect + checkpoint
         // each) — overlapped from a 2-thread pool (guide §2.6, the
-        // q000/q215 shape); each build's jobs and results unchanged
+        // q000 staging shape); each build's jobs and results unchanged
         val (rx, ry) = graft.Par.scope(s, 2) { p =>
           val fx = p.fork("q334: ranks x")(doubledMidranks(s,
             perUser.groupBy(col("x").as("v")).agg(count(lit(1)).as("c")))

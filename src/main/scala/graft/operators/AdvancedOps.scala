@@ -101,10 +101,10 @@ object AdvancedOps extends QueryModule {
         .select(col("vec_id").as("id"),
           transform(col("embedding"), x => x.cast("double")).as("x"))
       val stack = graft.rbm.DBN.pretrain(s, data, Seq(64, 16, 8), epochs = 1)
+      // in (i, j) order, as weightsToDf yields it: no sort job
       graft.rbm.RBM.weightsToDf(s, stack.last)
         .select(col("i"), col("j"), round(col("w"), 6).as("w"),
           lit(1).as("layer"))
-        .orderBy(col("i"), col("j"))
     }),
 
     // Multiple DISTINCT aggregates in one grouped aggregation — plans

@@ -223,7 +223,9 @@ object RBM {
     w + (grad *:* scale) - (w *:* (cfg.epsilon * cfg.weightcost))
   }
 
-  /** Weight matrix → (i, j, w) DataFrame for inspection/oracle dumps. */
+  /** Weight matrix → (i, j, w) DataFrame for inspection/oracle dumps,
+    * its rows in (i, j) order.
+    */
   def weightsToDf(spark: SparkSession, w: DenseMatrix[Double]): DataFrame = {
     import spark.implicits._
     val rows = for (i <- 0 until w.rows; j <- 0 until w.cols)

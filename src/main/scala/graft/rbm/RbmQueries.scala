@@ -28,9 +28,10 @@ object RbmQueries extends QueryModule {
           transform(col("embedding"), x => x.cast("double")).as("x"))
       val w0 = RBM.initWeights(cfg)
       val w1 = RBM.cd1Epoch(s, data, w0, cfg)
+      // weightsToDf yields (i, j) order: a global sort would only add
+      // a range exchange over the driver-built rows
       RBM.weightsToDf(s, w1)
         .select(col("i"), col("j"), round(col("w"), 6).as("w"))
-        .orderBy(col("i"), col("j"))
     }),
 
     // Back-propagation fine-tuning over a pre-trained layer — the
@@ -68,8 +69,7 @@ object RbmQueries extends QueryModule {
           BigDecimal.RoundingMode.HALF_UP).toDouble,
           BigDecimal(t.accuracy).setScale(4,
             BigDecimal.RoundingMode.HALF_UP).toDouble, t.n))
-        .toDF("epoch", "loss", "accuracy", "n")
-        .orderBy(col("epoch"))
+        .toDF("epoch", "loss", "accuracy", "n") // in epoch order
     }),
 
     // Deterministic forward propagation (A11) with a fixed rational

@@ -132,7 +132,7 @@ object SourceQueries extends QueryModule {
       val ordT = s"g186_ord_$id"
       try {
         // the two bucketed writes are independent jobs into different
-        // tables/paths — overlapped (guide §2.6, the q000/q215 shape);
+        // tables/paths — overlapped (guide §2.6, the q000 staging shape);
         // both finish before the threshold window below opens, so
         // neither write's planning sees it
         Par.scope(s, 2) { p =>

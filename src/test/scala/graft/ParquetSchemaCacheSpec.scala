@@ -1,8 +1,7 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import java.util.concurrent.CyclicBarrier
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
 /** [[Tables.parquet]] / [[Tables.schemaOf]]: the same schema and rows as
@@ -13,37 +12,6 @@ class ParquetSchemaCacheSpec extends SparkSpec {
 
   private val fixtures = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Jobs `body` submits, counted by a listener on a job group. A
-    * marker job closes the group: listener events arrive in order, so
-    * once the marker's end is seen every earlier job start has been.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"schema-cache-${java.util.UUID.randomUUID()}"
-    val started = ConcurrentHashMap.newKeySet[Int]()
-    val ended = ConcurrentHashMap.newKeySet[Int]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group)
-          started.add(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (started.contains(e.jobId)) ended.add(e.jobId)
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, group)
-      try { body; sc.parallelize(Seq(1), 1).count() }
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
-      while ((started.isEmpty || ended.size < started.size) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(20)
-    } finally sc.removeSparkListener(l)
-    assert(started.size >= 1 && ended.size == started.size,
-      "the listener did not see the marker job end")
-    started.size - 1
-  }
 
   test("every fixture table reads with spark.read.parquet's schema and rows") {
     for (t <- fixtures) {
@@ -94,5 +62,56 @@ class ParquetSchemaCacheSpec extends SparkSpec {
       assert(jobsOf(Confs.withConfs(spark, off)(Tables.schemaOf(spark, path))) == 0)
       assert(jobsOf(Tables.schemaOf(spark, path)) == 0)
     } finally Scratch.deleteTree(dir)
+  }
+
+  test("four threads reading one new path run one inference job") {
+    val dir = Scratch.dir("schemacache_concurrent_")
+    try {
+      val path = dir.resolve("t.parquet").toString
+      spark.range(10).toDF("k").write.parquet(path)
+      val ready = new CyclicBarrier(4)
+      val schemas = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+      val jobs = jobsOf {
+        val readers = (1 to 4).map(_ => new Thread(() => {
+          ready.await()
+          schemas.add(Tables.schemaOf(spark, path))
+        }))
+        readers.foreach(_.start())
+        readers.foreach(_.join())
+      }
+      assert(schemas.size == 4 &&
+        schemas.stream().allMatch(_ == spark.read.parquet(path).schema))
+      assert(jobs == 1)
+    } finally Scratch.deleteTree(dir)
+  }
+
+  test("a failed inference fails its waiters and leaves no entry") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.config.Configurator
+    // the failing inference jobs are expected: keep their task stack
+    // traces out of the test log
+    val loud = Seq("org.apache.spark.executor.Executor",
+      "org.apache.spark.scheduler.TaskSetManager")
+    loud.foreach(Configurator.setLevel(_, Level.OFF))
+    val dir = Scratch.dir("schemacache_failed_")
+    try {
+      val path = dir.resolve("t.parquet").toString
+      java.nio.file.Files.write(dir.resolve("t.parquet"), Array[Byte](1, 2, 3))
+      val ready = new CyclicBarrier(4)
+      val failures = new java.util.concurrent.atomic.AtomicInteger()
+      val readers = (1 to 4).map(_ => new Thread(() => {
+        ready.await()
+        try Tables.schemaOf(spark, path)
+        catch { case _: Exception => failures.incrementAndGet() }
+      }))
+      readers.foreach(_.start())
+      readers.foreach(_.join())
+      assert(failures.get == 4)
+      // a leftover entry would fail this read without running a job
+      assert(jobsOf(intercept[Exception](Tables.schemaOf(spark, path))) >= 1)
+    } finally {
+      Scratch.deleteTree(dir)
+      loud.foreach(Configurator.setLevel(_, Level.WARN))
+    }
   }
 }

@@ -115,7 +115,7 @@ class PlanBudgetSpec extends SparkSpec {
     "q364_snapshot_changefeed",
     // q000 is action-style by design: it RUNS every content-addressed
     // staging build (sim-join sets/pairs, LSH chain, partsupp) and
-    // returns a 7-row count table; the staged builders' plans are
+    // returns a 7-row footer-count table; the staged builders' plans are
     // audited by DedupPlanSpec where they're consumed
     "q000_staging",
     // q373 stages the snapshot history + compaction then aggregates
@@ -144,9 +144,10 @@ class PlanBudgetSpec extends SparkSpec {
     // their remaining plans are narrow enough to budget-gate normally —
     // formerly skipped here because each ran components() eagerly.
     "q112_observe_metrics",
-    // q215 is action-style: building the frame runs the per-partition
-    // sketch builds + exact set-op counts and returns a driver-built
-    // ≤3-row result (ThetaSpec audits the sketch algebra itself)
+    // q215 is action-style: building the frame runs its one grouped
+    // aggregate (three sketches + three exact counts) and returns a
+    // driver-built 3-row result (ThetaSpec audits the sketch algebra,
+    // RoundsSpec the fused counts and the job budget)
     "q215_theta_setops",
     // q217 likewise: per-partition KLL builds + two exact aggregates
     // run while building; result is a driver-built 4-row frame
