@@ -145,8 +145,7 @@ object Hilbert {
   * allocates nothing.
   *
   * Null semantics deliberately MATCH the composed form everywhere, so
-  * swapping one for the other (by hand or via [[RewriteVecDot]])
-  * never changes a result: null array → null; any null ELEMENT →
+  * swapping one for the other never changes a result: null array → null; any null ELEMENT →
   * null (zip_with's `null × y` poisons the composed sum the same
   * way); mismatched lengths → null (zip_with pads the short side with
   * nulls, which poisons the composed sum too). Non-float/double array
@@ -237,107 +236,6 @@ case class VecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): VecDot = copy(left = l, right = r)
   override def prettyName: String = "graft_vec_dot"
-}
-
-/** Dot product over the MATCHED index prefix of two arrays — the
-  * scalar twin of the relational matvec shape
-  * `posexplode ⋈ posexplode on pos → SUM(x*y)`, with that form's exact
-  * semantics (which differ from [[VecDot]]'s):
-  *
-  *   - positions beyond `min(len(a), len(b))` simply don't match in
-  *     the join, so they are IGNORED here (VecDot nulls the result);
-  *   - a null ELEMENT makes that position's product null, which SQL
-  *     `SUM` skips, so null-element positions are SKIPPED here
-  *     (VecDot poisons the result);
-  *   - if no position yields a non-null product, `SUM` over the
-  *     pair's rows is null, so the result is null (not 0.0).
-  *
-  * Exists so [[graft.plans.RewriteMatvecJoin]] can replace the
-  * exploded join with `SUM(graft_vec_dot_matched(a, b))` over the
-  * un-exploded rows without changing any result. Accumulates in
-  * double in ascending index order, inside whole-stage codegen.
-  */
-case class VecDotMatched(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(e: Expression): Boolean = e.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<float|double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  @transient private lazy val aFloat =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  @transient private lazy val bFloat =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  @transient private lazy val aNullable =
-    left.dataType.asInstanceOf[ArrayType].containsNull
-  @transient private lazy val bNullable =
-    right.dataType.asInstanceOf[ArrayType].containsNull
-
-  private def elemGetter(float: Boolean): String =
-    if (float) "getFloat" else "getDouble"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = java.lang.Math.min(a.numElements(), b.numElements())
-    var s = 0.0
-    var any = false
-    var i = 0
-    while (i < n) {
-      if (!((aNullable && a.isNullAt(i)) || (bNullable && b.isNullAt(i)))) {
-        val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-        val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
-        s += x * y
-        any = true
-      }
-      i += 1
-    }
-    if (any) s else null
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val any = ctx.freshName("any")
-      val nullChecks = Seq(
-        if (aNullable) Some(s"$a.isNullAt($i)") else None,
-        if (bNullable) Some(s"$b.isNullAt($i)") else None).flatten
-      val body =
-        s"""$acc += (double) $a.${elemGetter(aFloat)}($i)
-           |  * (double) $b.${elemGetter(bFloat)}($i);
-           |$any = true;""".stripMargin
-      val guarded =
-        if (nullChecks.isEmpty) body
-        else s"""if (!(${nullChecks.mkString(" || ")})) {
-           |  $body
-           |}""".stripMargin
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |boolean $any = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $guarded
-         |}
-         |if ($any) { ${ev.value} = $acc; } else { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): VecDotMatched = copy(left = l, right = r)
-  override def prettyName: String = "graft_vec_dot_matched"
 }
 
 /** All length-`n` byte-window substrings of a string, as an array —

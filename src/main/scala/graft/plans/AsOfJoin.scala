@@ -56,8 +56,7 @@ object AsOfJoin {
     * strictly below `leftTime` (time ties broken by the greatest
     * `rightTieBreak`). Column names must not collide across sides —
     * rename the right side first. Installs [[AsOfJoinStrategy]] into
-    * the session's experimental strategies if absent (idempotent; the
-    * spark.sql.extensions route via GraftExtensions works too).
+    * the session's experimental strategies if absent (idempotent).
     */
   def join(left: DataFrame, right: DataFrame, leftKey: String,
       rightKey: String, leftTime: String, rightTime: String,
@@ -78,9 +77,8 @@ object AsOfJoin {
   }
 }
 
-/** Plans [[AsOfJoin]] into [[AsOfJoinExec]]; injected via
-  * `experimental.extraStrategies` (per-session, no restart) or
-  * `injectPlannerStrategy` (GraftExtensions).
+/** Plans [[AsOfJoin]] into [[AsOfJoinExec]]; [[AsOfJoin.join]] injects
+  * it via `experimental.extraStrategies` (per-session, no restart).
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

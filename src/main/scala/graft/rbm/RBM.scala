@@ -93,9 +93,8 @@ object RBM {
   /** CD-1 gradient contribution of one example: posprods − negprods
     * (reference positive phase `rbmmapper.java:144-183`, negative phase
     * `rbmmapper.java:185-220`, assembly `propmapper.java:242-256`).
-    * Accumulates into the flat row-major `acc[i*h + j]` in place —
-    * shared by the treeAggregate path ([[cd1Epoch]]) and the typed
-    * [[CD1GradientAggregator]], so both are one source of truth.
+    * Accumulates into the flat row-major `acc[i*h + j]` in place; the
+    * per-example kernel of [[cd1Epoch]]'s treeAggregate.
     */
   private[graft] def accumulateGradient(
       acc: Array[Double],

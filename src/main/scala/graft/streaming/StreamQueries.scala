@@ -635,50 +635,9 @@ object StreamQueries extends QueryModule {
         System.currentTimeMillis() + mtimePlusMs))
   }
 
-  /** Shared replay harness: stage the events fixture into a cached
-    * tmpfs dir (the file stream source requires a directory) `copies`
-    * times (>1 = an at-least-once source: every event duplicated), run
-    * `build` over a file-source stream of it — one deterministic
-    * batch — into a memory sink, and return the (unordered) sink
-    * table; callers apply their own transforms/ordering. Conf
-    * overrides and the per-run checkpoint are restored/removed before
-    * returning — the memory sink holds the result rows driver-side,
-    * so nothing references them.
-    *
-    * Shuffle partitions are pinned to 4 for the stateful stage:
-    * state-store instances (and their checkpoint dirs + open/commit
-    * cost) scale with shuffle partitions, and the ≤100k keys in one
-    * replayed batch gain nothing from the session's CPU-count
-    * setting. An unbounded deployment would size this to key
-    * cardinality, not core count. Whole-stage codegen is disabled for
-    * the replay for the same finite-batch reason: each micro-batch
-    * re-plans and re-compiles the generated code, a fixed ~0.2-0.4s
-    * that a 1-3-batch replay never amortizes (a long-running stream
-    * compiles once and runs thousands of batches — it would keep
-    * codegen on). Both settings are restored on exit.
-    *
-    * Event time is normalized once at the source via [[tsAsTimestamp]]
-    * (schema-probed, precision-portable); everything downstream sees a
-    * proper µs TimestampType whatever the fixture's physical type.
-    *
-    * Concurrency contract: the session-conf overrides make this
-    * harness single-query-at-a-time per session (a query planned
-    * concurrently in the same session would inherit the temporary
-    * shuffle setting). The driver's Verify/Bench run queries
-    * sequentially; a server deployment would isolate replays in their
-    * own session (`spark.newSession()`).
-    */
-  private def t[A](label: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    if (sys.env.contains("GRAFT_REPLAY_TIMING"))
-      println(f"[replay-t] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    r
-  }
-
   /** The session-conf window every replay harness runs in (the
-    * shuffle-partition pin is explained above); [[replay]] also turns
-    * whole-stage codegen off.
+    * shuffle-partition pin is explained at [[replay]], which also turns
+    * whole-stage codegen off).
     */
   private val replayConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
@@ -815,6 +774,39 @@ object StreamQueries extends QueryModule {
     }
   }
 
+  /** Shared replay harness: stage the events fixture into a cached
+    * tmpfs dir (the file stream source requires a directory) `copies`
+    * times (>1 = an at-least-once source: every event duplicated), run
+    * `build` over a file-source stream of it — one deterministic
+    * batch — into a memory sink, and return the (unordered) sink
+    * table; callers apply their own transforms/ordering. Conf
+    * overrides and the per-run checkpoint are restored/removed before
+    * returning — the memory sink holds the result rows driver-side,
+    * so nothing references them.
+    *
+    * Shuffle partitions are pinned to 4 for the stateful stage:
+    * state-store instances (and their checkpoint dirs + open/commit
+    * cost) scale with shuffle partitions, and the ≤100k keys in one
+    * replayed batch gain nothing from the session's CPU-count
+    * setting. An unbounded deployment would size this to key
+    * cardinality, not core count. Whole-stage codegen is disabled for
+    * the replay for the same finite-batch reason: each micro-batch
+    * re-plans and re-compiles the generated code, a fixed ~0.2-0.4s
+    * that a 1-3-batch replay never amortizes (a long-running stream
+    * compiles once and runs thousands of batches — it would keep
+    * codegen on). Both settings are restored on exit.
+    *
+    * Event time is normalized once at the source via [[tsAsTimestamp]]
+    * (schema-probed, precision-portable); everything downstream sees a
+    * proper µs TimestampType whatever the fixture's physical type.
+    *
+    * Concurrency contract: the session-conf overrides make this
+    * harness single-query-at-a-time per session (a query planned
+    * concurrently in the same session would inherit the temporary
+    * shuffle setting). The driver's Verify/Bench run queries
+    * sequentially; a server deployment would isolate replays in their
+    * own session (`spark.newSession()`).
+    */
   private def replay(s: SparkSession, d: String, copies: Int = 1,
       mode: String = "complete", sentinel: Boolean = false,
       filesPerTrigger: Option[Int] = None)(
@@ -822,7 +814,7 @@ object StreamQueries extends QueryModule {
     val ckpt = graft.Scratch.dir("replay_ckpt_")
     try Confs.withConfs(s,
         replayConfs :+ ("spark.sql.codegen.wholeStage" -> "false")) {
-      val stage = t("stage") { stagedSource(s, d, copies, sentinel) }
+      val stage = stagedSource(s, d, copies, sentinel)
       // ALL staged files land in ONE micro-batch (pinned explicitly so
       // a Spark default change can't silently break it). Non-sentinel
       // replays (q92's at-least-once dedup proof in particular) NEED
@@ -857,11 +849,11 @@ object StreamQueries extends QueryModule {
       // That removes the stop-vs-trigger race class entirely: there is
       // no external stop() racing an in-flight trigger, and a stream
       // error surfaces deterministically from awaitTermination().
-      val q = t("query-start") { build(stream).writeStream.outputMode(mode)
+      val q = build(stream).writeStream.outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName(sink).start() }
-      try t("await") { q.awaitTermination() } finally t("stop") { q.stop() }
+        .format("memory").queryName(sink).start()
+      try q.awaitTermination() finally q.stop()
       s.table(sink)
     } finally graft.Scratch.deleteTree(ckpt)
   }

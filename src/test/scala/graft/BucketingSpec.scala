@@ -24,9 +24,7 @@ class BucketingSpec extends SparkSpec {
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .option("path", s"$wh/ord_b").saveAsTable("ord_b")
 
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try Confs.withConfs(spark, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val joined = spark.table("li_b")
         .join(spark.table("ord_b"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderstatus")).agg(sum(col("l_quantity")).as("q"))
@@ -48,7 +46,6 @@ class BucketingSpec extends SparkSpec {
       val got = joined.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(got == expect)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS ord_b")
     }

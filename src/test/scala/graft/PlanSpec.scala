@@ -58,9 +58,7 @@ class PlanSpec extends SparkSpec {
     val dflt = execPlan("q118_interval_bucket_join")
     assert(!dflt.contains("BroadcastNestedLoopJoin") && !dflt.contains("CartesianProduct"),
       s"interval join planned non-equi at default sizes:\n$dflt")
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Confs.withConfs(spark, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val p = execPlan("q118_interval_bucket_join")
       val smjLine = p.linesIterator.find(_.contains("SortMergeJoin"))
         .orElse(p.linesIterator.find(_.contains("ShuffledHashJoin")))
@@ -69,7 +67,7 @@ class PlanSpec extends SparkSpec {
         s"join not keyed on bucket:\n${smjLine.get}")
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"interval join fell back to a non-equi physical plan:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
   }
 
   test("q16 forward prop is a single narrow stage — zero shuffles") {

@@ -227,13 +227,10 @@ class PropertySpec extends SparkSpec {
     val q = SparkEntry.queries("q129_embedding_quantize")
     val base = q(spark, sf001).collect().map(_.toSeq).toSeq
     assert(base.nonEmpty)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      for (p <- Seq("1", "13")) {
-        spark.conf.set("spark.sql.shuffle.partitions", p)
+    for (p <- Seq("1", "13"))
+      Confs.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> p)) {
         assert(q(spark, sf001).collect().map(_.toSeq).toSeq == base,
           s"codes changed under shuffle.partitions=$p")
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

@@ -2,13 +2,11 @@ package graft.functions
 
 import java.math.BigInteger
 import graft.SparkSpec
-import graft.rbm.{CD1GradientAggregator, RBM}
 import org.apache.spark.sql.functions._
 import graft.functions.exprs._
 
-/** Pins the custom Catalyst layer: native expressions against
-  * independent implementations, the optimizer rewrite rule, and the
-  * fused CD-1 Aggregator against the treeAggregate path.
+/** Pins the native Catalyst expressions against independent
+  * implementations.
   */
 class NativeExprSpec extends SparkSpec {
 
@@ -113,6 +111,29 @@ class NativeExprSpec extends SparkSpec {
       "length mismatch must yield null (zip_with null-pad parity)")
     assert(withNull.forall(_.isNullAt(2)),
       "null element must poison the sum (zip_with parity)")
+    // the local rows above are evaluated interpreted; a parquet scan
+    // runs the generated loop, with and without its per-element null
+    // guard: a nullable-element array (null on odd keys), a dense one,
+    // and a short one for the length mismatch
+    val price = coalesce(col("o_totalprice"), lit(0.0))
+    val scanned = graft.Tables.orders(spark, sf001).limit(50).select(
+      array(when(col("o_orderkey") % 2 === 0, col("o_totalprice")), lit(1.0))
+        .as("nullable"),
+      array(price, price * 2).as("dense"),
+      array(lit(0.5), lit(-1.5)).as("b"),
+      array(lit(0.5)).as("short"))
+    val pairs = Seq("nullable" -> "b", "dense" -> "b", "dense" -> "short")
+    val got = scanned.select(pairs.flatMap { case (a, b) =>
+      Seq(graft_vec_dot(col(a), col(b)), aggregate(zip_with(col(a), col(b),
+        (x, y) => x.cast("double") * y.cast("double")),
+        lit(0.0), (acc, x) => acc + x))
+    }: _*).collect()
+    for (r <- got; i <- pairs.indices)
+      assert(Option(r.get(2 * i)) == Option(r.get(2 * i + 1)),
+        s"${pairs(i)} parity: $r")
+    assert(got.exists(_.isNullAt(0)) && got.exists(!_.isNullAt(0)),
+      "the nullable input must give both null and non-null sums")
+    assert(got.forall(r => !r.isNullAt(2)) && got.forall(_.isNullAt(4)))
     // non-float/double arrays are an analysis error, not a runtime one
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       df.select(graft_vec_dot(array(lit(1), lit(2)), array(lit(3), lit(4))))
@@ -135,156 +156,6 @@ class NativeExprSpec extends SparkSpec {
       .select(graft_rolling_hash(col("s"))).as[Long].collect()
     inputs.zip(got).foreach { case (s, g) =>
       assert(g == reference(s), s"mismatch for '$s'")
-    }
-  }
-
-  test("RewriteSigmoid collapses 1/(1+exp(-x)) into the native expression") {
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteSigmoid)
-    try {
-      // must read a real source: local literal relations constant-fold
-      // before the pattern can survive into the optimized plan
-      val df = graft.Tables.lineitem(spark, sf001)
-        .select((lit(1.0) / (lit(1.0) + exp(-col("l_quantity")))).as("s"))
-      val optimized = df.queryExecution.optimizedPlan.toString()
-      assert(optimized.contains("graft_sigmoid"),
-        s"rewrite did not fire:\n$optimized")
-      // and semantics are unchanged
-      val v = df.limit(1).as[Double].head()
-      assert(v > 0.5 && v <= 1.0) // sigmoid of quantity ≥ 1
-    } finally spark.experimental.extraOptimizations = Nil
-  }
-
-  test("RewriteVecDot fuses aggregate(zip_with(*)) into graft_vec_dot " +
-    "with identical results, including nullable-element arrays") {
-    def composedOf(dfArrays: org.apache.spark.sql.DataFrame) =
-      dfArrays.select(col("o_orderkey"),
-        aggregate(zip_with(col("a"), col("b"),
-          (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, v) => acc + v).as("dot"))
-    def results(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-
-    val price = coalesce(col("o_totalprice"), lit(0.0))
-    val dense = graft.Tables.orders(spark, sf001).limit(50)
-      .select(col("o_orderkey"),
-        array(price, price * 2).as("a"),
-        array(lit(0.5), lit(-1.5)).as("b"))
-    // nullable elements (CASE WHEN injects a nullable slot): the
-    // fused kernel must null-propagate exactly like the composed form
-    val sparse = graft.Tables.orders(spark, sf001).limit(50)
-      .select(col("o_orderkey"),
-        array(when(col("o_orderkey") % 2 === 0, col("o_totalprice")),
-          lit(1.0)).as("a"),
-        array(lit(0.5), lit(-1.5)).as("b"))
-    // mismatched lengths: zip_with null-pads → composed sum is null
-    val mismatched = graft.Tables.orders(spark, sf001).limit(50)
-      .select(col("o_orderkey"),
-        array(price, price * 2).as("a"),
-        array(lit(0.5)).as("b"))
-
-    for (src <- Seq(dense, sparse, mismatched)) {
-      spark.experimental.extraOptimizations = Nil
-      val expected = results(composedOf(src))
-      spark.experimental.extraOptimizations = Seq(graft.plans.RewriteVecDot)
-      try {
-        val fused = composedOf(src)
-        assert(fused.queryExecution.optimizedPlan.toString()
-          .contains("graft_vec_dot"),
-          s"rewrite did not fire:\n${fused.queryExecution.optimizedPlan}")
-        assert(results(fused) == expected, "fused results must be identical")
-      } finally spark.experimental.extraOptimizations = Nil
-    }
-    // sanity on the shapes: sparse has nulls for odd keys, mismatched
-    // is all-null — the parity above must not be vacuous
-    val sparseExpected = results(composedOf(sparse))
-    assert(sparseExpected.values.exists(_.isEmpty) &&
-      sparseExpected.values.exists(_.nonEmpty))
-    assert(results(composedOf(mismatched)).values.forall(_.isEmpty))
-  }
-
-  test("SQL names registered by GraftExtensions resolve and evaluate, " +
-    "and wrong arity is a friendly analysis error") {
-    import graft.plans.GraftExtensions
-    // runtime registration of the SAME builders injectFunction uses
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sigmoid", GraftExtensions.buildSigmoid, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", GraftExtensions.buildRollingHash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_dot", GraftExtensions.buildVecDot, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_adjacent_pairs", GraftExtensions.buildAdjacentPairs, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_byte_ngrams", GraftExtensions.buildByteNgrams, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc_normalize", GraftExtensions.buildNfcNormalize, "scala_udf")
-    val r = spark.sql(
-      "SELECT graft_sigmoid(0) AS s, graft_rolling_hash('ab') AS h, " +
-        "graft_vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS v, " +
-        "graft_adjacent_pairs(array('a', 'b', 'c')) AS p, " +
-        "graft_byte_ngrams('abcd', 2) AS g, " +
-        "graft_nfc_normalize('á') AS n")
-      .head()
-    assert(r.getDouble(0) == 0.5)
-    assert(r.getLong(1) == 257L * 'a'.toLong + 'b'.toLong)
-    assert(r.getDouble(2) == 11.0)
-    assert(r.getSeq[String](3) == Seq("a b", "b c"))
-    assert(r.getSeq[String](4) == Seq("ab", "bc", "cd"))
-    assert(r.getString(5) == "á")
-    // arity is validated at analysis time with WRONG_NUM_ARGS, not an
-    // IndexOutOfBoundsException from children(1)
-    for ((sql, fn) <- Seq(
-        "SELECT graft_vec_dot(array(1.0d))" -> "graft_vec_dot",
-        "SELECT graft_sigmoid(1.0d, 2.0d)" -> "graft_sigmoid",
-        "SELECT graft_rolling_hash()" -> "graft_rolling_hash")) {
-      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql))
-      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", sql)
-      assert(e.getMessage.contains(fn), sql)
-    }
-    // n accepts any foldable integral expression (the builder runs
-    // before constant folding), and a genuinely non-foldable n raises
-    // the dedicated error class, not a misleading arity error
-    val folded = spark.sql(
-      "SELECT graft_byte_ngrams('abcd', 1 + 1) AS a, " +
-        "graft_byte_ngrams('abcd', CAST(3 AS INT)) AS b, " +
-        "graft_byte_ngrams('abcd', 2L) AS c, " +
-        "graft_byte_ngrams('abcd', CAST(3 AS BIGINT)) AS d").head()
-    assert(folded.getSeq[String](0) == Seq("ab", "bc", "cd"))
-    assert(folded.getSeq[String](1) == Seq("abc", "bcd"))
-    // BIGINT literals are foldable too — they must fold, not raise a
-    // misleading NON_FOLDABLE_ARGUMENT; out-of-Int-range n is a range
-    // error naming the value
-    assert(folded.getSeq[String](2) == Seq("ab", "bc", "cd"))
-    assert(folded.getSeq[String](3) == Seq("abc", "bcd"))
-    val oor = intercept[Exception](
-      spark.sql("SELECT graft_byte_ngrams('abcd', 5000000000)").collect())
-    assert(oor.getMessage.contains("out of Int range"), oor.getMessage)
-    val nf = intercept[org.apache.spark.sql.AnalysisException](
-      spark.range(1).selectExpr("graft_byte_ngrams('abcd', CAST(id AS INT))")
-        .collect())
-    assert(nf.getCondition == "NON_FOLDABLE_ARGUMENT", nf.getMessage)
-  }
-
-  test("fused CD1 Aggregator produces the same gradient as a scalar sweep") {
-    val d = 4; val h = 3; val seed = 11L
-    val cfg = RBM.Config(d, h, seed = seed)
-    val w = RBM.initWeights(cfg)
-    val wFlat = Array.tabulate(d * h)(k => w(k / h, k % h))
-    val examples = (0L until 16L).map { id =>
-      id -> Array.tabulate(d)(i => ((id * 13 + i * 7) % 100) / 100.0)
-    }
-    // engine: through the Dataset aggregation API (partial+final agg)
-    val agg = new CD1GradientAggregator(wFlat, d, h, seed)
-    val got = spark.createDataset(examples).repartition(3)
-      .select(agg.toColumn).head()
-    // independent: plain sequential fold
-    val draw = new RBM.HashDraw(seed)
-    val want = examples.foldLeft(new Array[Double](d * h)) { case (acc, (id, x)) =>
-      RBM.accumulateGradient(acc, x, wFlat, d, h, id, draw)
-    }
-    got.zip(want).zipWithIndex.foreach { case ((g, e), k) =>
-      assert(math.abs(g - e) < 1e-12, s"grad[$k]: $g vs $e")
     }
   }
 }

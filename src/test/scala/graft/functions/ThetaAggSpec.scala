@@ -4,11 +4,10 @@ import graft.{SparkSpec, Tables}
 import graft.functions.exprs.graft_theta_sketch_agg
 import org.apache.spark.sql.functions._
 
-/** The theta-sketch TypedImperativeAggregate as a first-class SQL
-  * aggregate: per-group sketches in a plain groupBy with the engine's
-  * partial/final split, estimates inside the sketch's own interval
-  * against exact distinct counts, and the SQL-registered name working
-  * through GraftExtensions.
+/** The theta and KLL sketch TypedImperativeAggregates as first-class
+  * aggregates: per-group sketches in a plain groupBy with the engine's
+  * partial/final split, and estimates inside each sketch's own error
+  * bound against exact answers.
   */
 class ThetaAggSpec extends SparkSpec {
 
@@ -36,46 +35,6 @@ class ThetaAggSpec extends SparkSpec {
         s"${r.getString(0)}: exact $ex outside " +
           s"[${sk.getLowerBound(3)}, ${sk.getUpperBound(3)}]")
     }
-  }
-
-  test("the SQL-registered graft_theta_sketch_agg matches the Column " +
-    "surface, and rejects a non-foldable nominalEntries") {
-    import graft.plans.GraftExtensions
-    spark.sessionState.functionRegistry.registerFunction(
-      new org.apache.spark.sql.catalyst.FunctionIdentifier(
-        "graft_theta_sketch_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ThetaSketchAgg].getName, "graft_theta_sketch_agg"),
-      GraftExtensions.buildThetaSketchAgg)
-    Tables.documents(spark, sf001).createOrReplaceTempView("g_theta_docs")
-    val viaSql = spark.sql(
-      """SELECT graft_theta_sketch_agg(doc_id, 4096) AS sk
-        |FROM g_theta_docs""".stripMargin)
-      .head().getAs[Array[Byte]]("sk")
-    val viaCol = Tables.documents(spark, sf001)
-      .agg(graft_theta_sketch_agg(col("doc_id"), 4096).as("sk"))
-      .head().getAs[Array[Byte]]("sk")
-    assert(ThetaSketchAgg.estimate(viaSql) == ThetaSketchAgg.estimate(viaCol))
-    val err = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql(
-        """SELECT graft_theta_sketch_agg(doc_id, CAST(n_chars AS INT))
-          |FROM g_theta_docs""".stripMargin).collect()
-    }
-    assert(err.getCondition == "NON_FOLDABLE_ARGUMENT", err.getMessage)
-    // out-of-range Int literals must fail analysis with the intended
-    // message, not reach DataSketches (the Long branch already did;
-    // the Int branch was unchecked until round 12)
-    val bad = intercept[IllegalArgumentException] {
-      spark.sql("SELECT graft_theta_sketch_agg(doc_id, 0) FROM g_theta_docs")
-        .collect()
-    }
-    assert(bad.getMessage.contains("bad nominalEntries"), bad.getMessage)
-    import graft.plans.GraftExtensions.buildKllSketchAgg
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val badK = intercept[IllegalArgumentException] {
-      buildKllSketchAgg(Seq(Literal(1.0), Literal(7))) // Int k below KLL min 8
-    }
-    assert(badK.getMessage.contains("bad k"), badK.getMessage)
   }
 
   test("groupBy KLL sketches honor the published rank-error bound " +

@@ -125,26 +125,18 @@ class DedupPlanSpec extends SparkSpec {
         s"unique document number $i with filler words about topic ${i % 37} " +
           s"and entropy ${i * 31} plus tail ${i * 7919}"))
     val docs = texts.toDF("doc_id", "text")
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      "spark.sql.shuffle.partitions")
-    val prior = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "100b")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "100b")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "100b")
+    graft.Confs.withConfs(spark, Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "100b",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "100b",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "100b",
       // the cluster's 8 hot band buckets must stand out against the
       // partition-size MEDIAN — at the suite default of 4 partitions
       // every partition absorbs ~2 hot buckets and nothing is skewed
       // relative to anything (exactly why a 1000-executor cluster runs
       // thousands of shuffle partitions, not 4)
-      spark.conf.set("spark.sql.shuffle.partitions", "37")
+      "spark.sql.shuffle.partitions" -> "37")) {
       val edges = Dedup.candidateEdges(Dedup.bandsOf(docs))
       // collect() executes THIS DataFrame's plan (count() would plan a
       // separate aggregate query and leave edges' own AQE plan unfinalized)
@@ -153,9 +145,6 @@ class DedupPlanSpec extends SparkSpec {
       val plan = edges.queryExecution.executedPlan.toString()
       assert(plan.contains("skew=true"),
         s"AQE did not split the hot band bucket:\n$plan")
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

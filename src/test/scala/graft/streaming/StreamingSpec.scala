@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
   type Ev = (Long, Timestamp, Long, String, Double)
 
   private def toEventsDf(ms: MemoryStream[Ev]): DataFrame =
-    ms.toDF.toDF("event_id", "ts", "user_id", "event_type", "value")
+    ms.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
 
   private def startQuery(df: DataFrame, mode: String): (StreamingQuery, String) = {
     sinkSeq += 1
@@ -85,49 +85,6 @@ class StreamingSpec extends SparkSpec {
       ("2024-01-01 00:10:00.0", 1L, 3.0)))
   }
 
-  test("watermark drops events later than the allowed lateness") {
-    val ms = MemoryStream[Ev]
-    val (q, sink) = startQuery(StreamingOps.watermarkedCounts(toEventsDf(ms)), "append")
-    // batch 1: two on-time events in [00:00,00:10), plus one at 01:00
-    // that advances the watermark to 00:50
-    ms.addData(
-      (1L, ts("00:01"), 1L, "click", 1.0),
-      (2L, ts("00:07"), 1L, "click", 1.0),
-      (3L, ts("01:00"), 1L, "click", 1.0))
-    q.processAllAvailable()
-    // batch 2: a late event for the closed [00:00,00:10) window (must
-    // be dropped) and a fresh one to trigger emission
-    ms.addData(
-      (4L, ts("00:06"), 1L, "click", 1.0),
-      (5L, ts("01:05"), 1L, "click", 1.0))
-    q.processAllAvailable(); q.stop()
-    val w0 = spark.table(sink).collect()
-      .filter(_.getTimestamp(0).toString == "2024-01-01 00:00:00.0")
-    assert(w0.length == 1 && w0.head.getLong(2) == 2,
-      s"late event must not count: ${w0.mkString(",")}")
-  }
-
-  test("session windows merge within the gap and split across it") {
-    val ms = MemoryStream[Ev]
-    val (q, sink) = startQuery(StreamingOps.sessionCounts(toEventsDf(ms)), "append")
-    ms.addData(
-      (1L, ts("00:00"), 7L, "click", 1.0),
-      (2L, ts("00:10"), 7L, "click", 2.0), // same session (gap < 30m)
-      (3L, ts("01:00"), 7L, "click", 4.0)) // new session
-    q.processAllAvailable()
-    ms.addData((4L, ts("03:00"), 7L, "click", 0.0)) // advance watermark
-    q.processAllAvailable(); q.stop()
-    val sessions = spark.table(sink).collect()
-      .map(r => (r.getTimestamp(0).toString, r.getTimestamp(1).toString,
-        r.getLong(3), r.getDouble(4)))
-    assert(sessions.contains(
-      ("2024-01-01 00:00:00.0", "2024-01-01 00:40:00.0", 2L, 3.0)),
-      s"merged session missing: ${sessions.mkString(";")}")
-    assert(sessions.contains(
-      ("2024-01-01 01:00:00.0", "2024-01-01 01:30:00.0", 1L, 4.0)),
-      s"split session missing: ${sessions.mkString(";")}")
-  }
-
   test("dropDuplicatesWithinWatermark emits each event_id once") {
     val ms = MemoryStream[Ev]
     val (q, sink) = startQuery(StreamingOps.dedupByEventId(toEventsDf(ms)), "append")
@@ -137,23 +94,6 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val ids = spark.table(sink).collect().map(_.getLong(0)).sorted
     assert(ids.sameElements(Array(1L, 2L, 3L)), s"got ${ids.mkString(",")}")
-  }
-
-  test("stream-stream join matches purchases to preceding clicks within the window") {
-    val ms = MemoryStream[Ev]
-    val (q, sink) = startQuery(
-      StreamingOps.clickToPurchaseJoin(toEventsDf(ms)), "append")
-    ms.addData(
-      (1L, ts("00:05"), 7L, "click", 0.0),
-      (2L, ts("00:20"), 7L, "purchase", 99.0),  // within 1h of click 1
-      (3L, ts("02:30"), 7L, "purchase", 11.0),  // no click within 1h
-      (4L, ts("00:10"), 8L, "click", 0.0))      // other user, no purchase
-    q.processAllAvailable()
-    ms.addData((5L, ts("05:00"), 9L, "click", 0.0)) // advance watermarks
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table(sink).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(rows.toSet == Set((7L, 1L, 2L, 99.0)), rows.mkString(";"))
   }
 
   test("parquet streaming sink appends files that read back consistently") {
@@ -176,38 +116,11 @@ class StreamingSpec extends SparkSpec {
       s"finalized window missing from parquet sink: ${back.mkString(";")}")
   }
 
-  test("transformWithState applies the online model step across batches " +
-    "(RocksDB state store)") {
-    import StreamingOps.{ModelUpdate, UserEvent}
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[UserEvent]
-      val (q, sink) = startQuery(
-        StreamingOps.onlineModel(ms.toDS(), epsilon = 0.5).toDF(), "update")
-      ms.addData(UserEvent(1L, 9L, 10.0)) // w: 0 + 0.5*(10-0) = 5
-      q.processAllAvailable()
-      ms.addData(UserEvent(2L, 9L, 10.0)) // w: 5 + 0.5*(10-5) = 7.5
-      q.processAllAvailable(); q.stop()
-      val rows = spark.table(sink).as[ModelUpdate].collect()
-      assert(rows.contains(ModelUpdate(9L, 1L, 5.0)), rows.mkString(";"))
-      assert(rows.contains(ModelUpdate(9L, 2L, 7.5)), rows.mkString(";"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("transformWithState holds per-key VECTOR state: gradient rows " +
     "accumulate element-wise across batches (RocksDB state store)") {
     import StreamingOps.{GradientEvent, WeightRow}
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.Confs.withConfs(spark, Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
       val ms = MemoryStream[GradientEvent]
       val (q, sink) = startQuery(
         StreamingOps.gradientMeans(ms.toDS()).toDF(), "update")
@@ -223,26 +136,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows((7L, 1L)) == Seq(2.0, 4.0, 6.0), rows.toString)
       assert(rows((7L, 2L)) == Seq(3.0, 2.0, 6.0), rows.toString)
       assert(rows((8L, 1L)) == Seq(1.0, 1.0, 1.0), rows.toString)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
-  }
-
-  test("flatMapGroupsWithState carries running per-user state across batches") {
-    import StreamingOps.{UserEvent, UserRunning}
-    val ms = MemoryStream[UserEvent]
-    val (q, sink) = startQuery(
-      StreamingOps.runningPerUser(ms.toDS()).toDF(), "update")
-    ms.addData(UserEvent(1L, 42L, 10.0), UserEvent(2L, 42L, 5.0))
-    q.processAllAvailable()
-    ms.addData(UserEvent(3L, 42L, 1.0), UserEvent(4L, 43L, 2.0))
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table(sink).as[UserRunning].collect()
-    assert(rows.contains(UserRunning(42L, 3L, 16.0)),
-      s"state not carried: ${rows.mkString(";")}")
-    assert(rows.contains(UserRunning(43L, 1L, 2.0)))
   }
 }
