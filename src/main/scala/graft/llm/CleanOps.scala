@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => sqlfn}
 import graft.{QueryModule, Tables}
 import graft.functions.exprs.graft_nfc_normalize
-import TextAnalysis.md5Int
+import TextAnalysis.{alphaTokens, alphaTokensSql, md5Int}
 
 /** Ingest-side cleaning and data-quality operators — the passes a web
   * corpus runs BEFORE the scoring/dedup stages in [[TextAnalysis]] /
@@ -37,13 +37,6 @@ import TextAnalysis.md5Int
   *     sliding window with the same plan shape.
   */
 object CleanOps extends QueryModule {
-
-  /** Lowercased alpha tokens (the [[TextPipeline]] tokenizer). */
-  private def alphaTokens =
-    array_remove(split(lower(col("text")), "[^a-z]+"), "")
-
-  private val alphaTokensSql =
-    """list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x != '')"""
 
   /** Content-defined chunk table for a (doc_id, text) frame: word-level
     * chunks whose boundaries are a pure function of word content

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
+import TextAnalysis.{alphaTokens, alphaTokensSql}
 
 /** Corpus curation and monitoring operators a 100 TB training-data
   * pipeline runs AROUND the cleaning passes in [[TextAnalysis]] /
@@ -33,13 +34,6 @@ import graft.{QueryModule, Tables}
   *     snapshot scans prune to (doc_id, text).
   */
 object CorpusOps extends QueryModule {
-
-  /** Lowercased alpha tokens (the [[TextPipeline]] tokenizer). */
-  private def alphaTokens =
-    array_remove(split(lower(col("text")), "[^a-z]+"), "")
-
-  private val alphaTokensSql =
-    """list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x != '')"""
 
   /** q40's quality score (length + stopword-ratio mix), rounded 6dp. */
   private def quality =

@@ -1669,9 +1669,8 @@ object Dedup extends QueryModule {
     * map back — 3 jobs total. When the graph is genuinely huge
     * (> maxDriverEdges), it falls back to [[propagateLabels]]:
     * distributed min-label propagation with pointer jumping, rounds =
-    * O(log component diameter). Same adaptive philosophy as Backprop's
-    * treeAggregate depth: the 1000-executor shape and the fixture
-    * shape want different plans, and the data decides.
+    * O(log component diameter): the 1000-executor shape and the
+    * fixture shape want different plans, and the data decides.
     */
   private[graft] def components(docs: DataFrame,
       maxDriverEdges: Long = 10000000L): DataFrame = {

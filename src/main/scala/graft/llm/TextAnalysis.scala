@@ -22,6 +22,14 @@ object TextAnalysis extends QueryModule {
   /** DuckDB twin of [[tokens]]. */
   val tokensSql = """list_filter(string_split_regex(text, '\s+'), t -> t <> '')"""
 
+  /** Lowercased alpha tokens of `text` — empty strings dropped, so the
+    * tokenization is split-safe on leading/trailing separators.
+    */
+  def alphaTokens: Column = array_remove(split(lower(col("text")), "[^a-z]+"), "")
+  /** DuckDB twin of [[alphaTokens]]. */
+  val alphaTokensSql =
+    """list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x != '')"""
+
   /** First 15 md5 hex chars as a 60-bit non-negative long (Spark). */
   def md5Int(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
+import TextAnalysis.alphaTokens
 
 /** Training-data text-pipeline operators beyond TextAnalysis's
   * stats/lang-id/quality scoring: TF-IDF term weighting, PII
@@ -18,12 +19,6 @@ import graft.{QueryModule, Tables}
   * driver.
   */
 object TextPipeline extends QueryModule {
-
-  /** Lowercased alpha tokens of `text` — empty strings dropped, so the
-    * tokenization is split-safe on leading/trailing separators.
-    */
-  private def tokens =
-    array_remove(split(lower(col("text")), "[^a-z]+"), "")
 
   /** DuckDB twin of [[bpeSymbols]]: the words→merges→enc→syms CTE
     * chain (no WITH keyword, no trailing comma). Callers prepend
@@ -79,7 +74,7 @@ object TextPipeline extends QueryModule {
     // spread: the pair-count pass and the 20-pass replace encode both
     // explode per token off the tiny corpus scan's single split
     val ranked = Tables.spread(s, Tables.documents(s, d))
-      .select(explode(tokens).as("tok"))
+      .select(explode(alphaTokens).as("tok"))
       .filter(length(col("tok")) >= 2)
       .select(explode(
         graft.functions.exprs.graft_byte_ngrams(col("tok"), 2)).as("pair"))
@@ -87,7 +82,7 @@ object TextPipeline extends QueryModule {
       .orderBy(col("freq").desc, col("pair")).limit(20)
       .select(col("pair")).collect().map(_.getString(0))
     val words = Tables.spread(s, Tables.documents(s, d))
-      .select(col("doc_id"), posexplode(tokens).as(Seq("widx", "tok")))
+      .select(col("doc_id"), posexplode(alphaTokens).as(Seq("widx", "tok")))
     val wrapped =
       concat(lit("|"), array_join(split(col("tok"), ""), "||"), lit("|"))
     val encoded = ranked.foldLeft(wrapped)((c, p) =>
@@ -121,7 +116,7 @@ object TextPipeline extends QueryModule {
     "q204_bpe_roundtrip" -> ((s, d) => {
       val words = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
-          posexplode(tokens).as(Seq("widx", "tok")))
+          posexplode(alphaTokens).as(Seq("widx", "tok")))
       val rebuilt = bpeSymbolsStaged(s, d)
         .groupBy(col("doc_id"), col("widx"))
         .agg(array_join(transform(
@@ -145,7 +140,7 @@ object TextPipeline extends QueryModule {
     // N crosses in as a 1-row broadcast scalar.
     "q80_tfidf" -> ((s, d) => {
       val toks = Tables.documents(s, d)
-        .select(col("doc_id"), explode(tokens).as("term"))
+        .select(col("doc_id"), explode(alphaTokens).as("term"))
       val tf = toks.groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("tf"))
       val n = Tables.documents(s, d).agg(count(lit(1)).as("n"))
@@ -192,7 +187,7 @@ object TextPipeline extends QueryModule {
     // wide). Rank is recovered afterwards by position in the sorted
     // collected array — ≤20 rows, no Window node at all.
     "q82_vocab_topk" -> ((s, d) => {
-      val toks = Tables.documents(s, d).select(explode(tokens).as("term"))
+      val toks = Tables.documents(s, d).select(explode(alphaTokens).as("term"))
       val freq = toks.groupBy(col("term")).agg(count(lit(1)).as("freq"))
       val total = freq.agg(sum(col("freq")).as("total"))
       val top = freq.orderBy(col("freq").desc, col("term")).limit(20)
@@ -229,7 +224,7 @@ object TextPipeline extends QueryModule {
       // expensive stage (see AdjacentPairs scaladoc)
       val bigrams = graft.functions.exprs.graft_adjacent_pairs(col("ts"))
       Tables.documents(s, d)
-        .withColumn("ts", tokens)
+        .withColumn("ts", alphaTokens)
         .filter(size(col("ts")) >= 2)
         .withColumn("n_tok", size(col("ts")))
         .withColumn("n_bi", size(col("ts")) - 1)
@@ -261,7 +256,7 @@ object TextPipeline extends QueryModule {
     // sort).
     "q134_bigram_pmi" -> ((s, d) => {
       val toks = Tables.documents(s, d)
-        .withColumn("ts", tokens)
+        .withColumn("ts", alphaTokens)
         .filter(size(col("ts")) >= 2)
       // codegen single-pass bigrams (q128's AdjacentPairs); the single
       // space is an unambiguous separator for [a-z]+ tokens, so the
@@ -331,7 +326,7 @@ object TextPipeline extends QueryModule {
     // pass itself stays a broadcast join + one keyed agg.
     "q136_unigram_logprob" -> ((s, d) => {
       val toks = Tables.documents(s, d)
-        .select(col("doc_id"), explode(tokens).as("term"))
+        .select(col("doc_id"), explode(alphaTokens).as("term"))
       val uni = toks.groupBy(col("term")).agg(count(lit(1)).as("nw"))
       val tot = uni.agg(sum(col("nw")).as("tu"))
       toks.join(broadcast(uni), "term")
@@ -376,7 +371,7 @@ object TextPipeline extends QueryModule {
     // re-sorted deterministically by (count desc, term).
     "q141_approx_topk_sketch" -> ((s, d) => {
       Tables.documents(s, d)
-        .select(explode(tokens).as("term"))
+        .select(explode(alphaTokens).as("term"))
         .agg(expr("approx_top_k(term, 20, 10000)").as("tk"))
         .select(explode(col("tk")).as("e"))
         .select(col("e.item").as("term"), col("e.count").as("freq"))
@@ -393,7 +388,7 @@ object TextPipeline extends QueryModule {
     // shuffles stay term-keyed and doc-keyed, same as q136/q80.
     "q142_ccnet_bucket" -> ((s, d) => {
       val toks = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), explode(tokens).as("term"))
+        .select(col("doc_id"), col("lang"), explode(alphaTokens).as("term"))
       val uni = toks.groupBy(col("term")).agg(count(lit(1)).as("nw"))
       val tot = uni.agg(sum(col("nw")).as("tu"))
       val scored = toks.join(broadcast(uni), "term")
@@ -510,7 +505,7 @@ object TextPipeline extends QueryModule {
       // byte 2-grams on the [a-z]+ tokens) — see q148's comment for
       // why the composed HOF forms lose
       val pairs = Tables.documents(s, d)
-        .select(explode(tokens).as("tok"))
+        .select(explode(alphaTokens).as("tok"))
         .filter(length(col("tok")) >= 2)
         .select(explode(graft.functions.exprs.graft_byte_ngrams(col("tok"), 2))
           .as("pair"))
@@ -554,7 +549,7 @@ object TextPipeline extends QueryModule {
     // divisions rounded once.
     "q286_bpe_fertility" -> ((s, d) => {
       val wordStats = Tables.documents(s, d)
-        .select(col("lang"), explode(tokens).as("tok"))
+        .select(col("lang"), explode(alphaTokens).as("tok"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("ws_tokens"),
           sum(length(col("tok"))).as("tok_chars"))
@@ -679,7 +674,7 @@ object TextPipeline extends QueryModule {
     "q158_filter_funnel" -> ((s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val tf = docs.select(col("doc_id"), explode(tokens).as("tok"))
+      val tf = docs.select(col("doc_id"), explode(alphaTokens).as("tok"))
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
       val rep = tf.groupBy(col("doc_id")).agg(
         round(max(col("c")).cast("double") / sum(col("c")), 6).as("rep"),
@@ -742,7 +737,7 @@ object TextPipeline extends QueryModule {
     "q269_vocab_richness" -> ((s, d) => {
       val bi = graft.functions.exprs.graft_adjacent_pairs(col("ts"))
       Tables.documents(s, d)
-        .withColumn("ts", tokens)
+        .withColumn("ts", alphaTokens)
         .filter(size(col("ts")) >= 2)
         .select(col("source"), explode(bi).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
@@ -765,7 +760,7 @@ object TextPipeline extends QueryModule {
 
     "q160_zipf_fit" -> ((s, d) => {
       val freq = Tables.documents(s, d)
-        .select(explode(tokens).as("term"))
+        .select(explode(alphaTokens).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("freq"))
       val ranked = freq.orderBy(col("freq").desc, col("term")).limit(1000)
         .agg(sort_array(collect_list(struct(
@@ -794,7 +789,7 @@ object TextPipeline extends QueryModule {
     // top-30 rank (pair tiebreaks).
     "q355_source_overlap" -> ((s, d) => {
       val dt = Tables.documents(s, d)
-        .select(col("source"), explode(tokens).as("t"))
+        .select(col("source"), explode(alphaTokens).as("t"))
         .distinct()
         .localCheckpoint() // (source × vocab)-bounded; 3 consumers
       val sizes = dt.groupBy(col("source")).agg(count(lit(1)).as("nv"))
@@ -834,7 +829,7 @@ object TextPipeline extends QueryModule {
     // corpus pass to the |sources| grid.
     "q349_temperature_mix" -> ((s, d) => {
       val srcTok = Tables.documents(s, d)
-        .select(col("source"), size(tokens).cast("long").as("n_tok"))
+        .select(col("source"), size(alphaTokens).cast("long").as("n_tok"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok"))
         .localCheckpoint() // |sources| grid: feeds totals, √, output
@@ -873,7 +868,7 @@ object TextPipeline extends QueryModule {
       val dt = Tables.documents(s, d)
         .select(pmod(graft.llm.TextAnalysis.md5Int(
           concat(lit("h:"), col("doc_id"))), lit(16)).as("shard"),
-          tokens.as("ts"))
+          alphaTokens.as("ts"))
       val perShard = dt.groupBy(col("shard"))
         .agg(sum(size(col("ts"))).as("ntok"))
       val firstSeen = dt
@@ -956,7 +951,7 @@ object TextPipeline extends QueryModule {
       val bucketOf = floor((lit(mx) - col("n_chars")) * nb / span).cast("int")
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"),
-          size(tokens).cast("long").as("n_tok"))
+          size(alphaTokens).cast("long").as("n_tok"))
         .withColumn("b", bucketOf)
       // phase 1: per-(source,bucket) subtotals — ≤|sources|·nb rows
       val subs = docs.groupBy(col("source"), col("b"))
@@ -1017,7 +1012,7 @@ object TextPipeline extends QueryModule {
     "q223_inverted_index" -> ((s, d) => {
       import graft.functions.exprs.graft_collect_top_k
       val posting = Tables.documents(s, d)
-        .select(col("doc_id"), explode(tokens).as("term"))
+        .select(col("doc_id"), explode(alphaTokens).as("term"))
         .groupBy(col("term"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
       posting.groupBy(col("term"))
@@ -1047,7 +1042,7 @@ object TextPipeline extends QueryModule {
     // posting-list delete). Output: the 15 highest-df v2 terms.
     "q225_incremental_index" -> ((s, d) => {
       def tf(docs: org.apache.spark.sql.DataFrame) = docs
-        .select(col("doc_id"), explode(tokens).as("term"))
+        .select(col("doc_id"), explode(alphaTokens).as("term"))
         .groupBy(col("term"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
       val docs = Tables.documents(s, d)
@@ -1085,7 +1080,7 @@ object TextPipeline extends QueryModule {
       // per-row expression work (no per-doc window, no shuffle until
       // the distinct): gram i = tokens[i..i+2] joined by spaces
       val tri = Tables.documents(s, d)
-        .select(col("doc_id"), tokens.as("ts"))
+        .select(col("doc_id"), alphaTokens.as("ts"))
         .select(col("doc_id"), explode(expr(
           // the IF guards the <3-token doc: sequence(0,-1) would step
           // DOWNWARD (Spark defaults step=-1 when start>stop), not
@@ -1144,7 +1139,7 @@ object TextPipeline extends QueryModule {
       // dedupe); localCheckpoint materializes the narrow (doc_id, t)
       // stream so the corpus tokenize+explode runs once (guide §2.4)
       val docTok = docs
-        .select(col("doc_id"), explode(array_distinct(tokens)).as("t"))
+        .select(col("doc_id"), explode(array_distinct(alphaTokens)).as("t"))
         .localCheckpoint()
       val freqTok = docTok.groupBy(col("t"))
         .agg(count(lit(1)).as("df"))
@@ -1181,7 +1176,7 @@ object TextPipeline extends QueryModule {
       // tokenize once for the df aggregation AND the per-doc probe —
       // same reuse argument as q244 (guide §2.4)
       val docTok = docs
-        .select(col("doc_id"), explode(array_distinct(tokens)).as("t"))
+        .select(col("doc_id"), explode(array_distinct(alphaTokens)).as("t"))
         .localCheckpoint()
       val freqTok = docTok.groupBy(col("t"))
         .agg(count(lit(1)).as("df"))
@@ -1219,7 +1214,7 @@ object TextPipeline extends QueryModule {
 
     "q211_bm25_topk" -> ((s, d) => {
       val tf = Tables.documents(s, d)
-        .select(col("doc_id"), explode(tokens).as("term"))
+        .select(col("doc_id"), explode(alphaTokens).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
         .persist()
       try {

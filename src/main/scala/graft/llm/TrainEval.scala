@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
+import TextAnalysis.{alphaTokens, alphaTokensSql}
 
 /** Supervised train/eval operators for the corpus-quality-classifier
   * leg of a training-data pipeline: an exact multinomial Naive Bayes
@@ -29,15 +30,6 @@ import graft.{QueryModule, Tables}
   * model trains on.
   */
 object TrainEval extends QueryModule {
-
-  /** Lowercased alpha tokens (CorpusOps' tokenizer, redeclared — the
-    * modules keep their helper surfaces private by design).
-    */
-  private def alphaTokens =
-    array_remove(split(lower(col("text")), "[^a-z]+"), "")
-
-  private val alphaTokensSql =
-    """list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x != '')"""
 
   /** q229's per-mille stopword score + weak dup label over whitespace
     * tokens, zero-token docs guarded out on both engines.

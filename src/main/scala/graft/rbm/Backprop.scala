@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions.col
   * implements (SURVEY §7.1 S6; the prop job only ever runs forward).
   * This closes that gap Spark-natively with the same distributed shape
   * as CD-1 pre-training ([[RBM.cd1Epoch]]): ship the weights in the
-  * task closure, accumulate per-example gradients inside a depth-2
-  * `treeAggregate` (so the driver receives `O(d·h + h·k)` doubles
-  * regardless of row count — the no-materialized-shuffle property that
-  * holds at 100 TB), update on the driver, loop.
+  * task closure, accumulate per-example gradients inside
+  * [[Reproducible.aggregate]]'s fold over the input canonicalized once
+  * (so the driver receives `nParts × O(d·h + h·k)` doubles per epoch
+  * regardless of row count), update on the driver, loop.
   *
   * Network: `x[d] → hidden[h] = σ(x·W1) → logits[k] = hidden·W2 →
   * softmax`, cross-entropy loss. One backward pass updates BOTH the
@@ -23,10 +23,9 @@ import org.apache.spark.sql.functions.col
   * fine-tuning recipes — CD-1 initialization leaves hidden
   * pre-activations near zero, so plain GD crawls; momentum
   * accumulates the persistent gradient direction without the
-  * overshoot a 10× step would cause). Deterministic — no sampling —
-  * so the loss trajectory is exactly reproducible (up to double
-  * merge-order noise ≤1e-12-ish, same class as CD-1's golden spec
-  * tolerance).
+  * overshoot a 10× step would cause). Deterministic — no sampling,
+  * and a canonical-order gradient sum — so the loss trajectory is
+  * bit-identical across runs and input layouts.
   */
 object Backprop {
 
@@ -37,11 +36,7 @@ object Backprop {
       epsilon: Double = 0.5, // full-batch step size
       momentum: Double = 0.0, // classical momentum (v = μv + g)
       epochs: Int = 10,
-      seed: Long = 42L,
-      // bitwise-reproducible gradient path ([[Reproducible]]) instead
-      // of the completion-order treeAggregate — for golden-pinned
-      // trajectories (q111's oracle row)
-      deterministic: Boolean = false)
+      seed: Long = 42L)
 
   /** Per-epoch metrics, measured on the weights BEFORE that epoch's
     * update (epoch 0 = the pre-trained stack + seeded head, untouched).
@@ -59,17 +54,15 @@ object Backprop {
   /** Forward + backward for ONE example, accumulating into the flat
     * gradient buffer: `[0, d·h)` = ∂L/∂W1 (row-major), `[d·h, d·h+h·k)`
     * = ∂L/∂W2, then 3 tail slots: example count, summed loss, correct
-    * count. Shared by the treeAggregate path and the spec's sequential
-    * reference fold — one source of truth, like
-    * [[RBM.accumulateGradient]].
+    * count.
     */
-  private[graft] def accumulateBackprop(
+  private def accumulateBackprop(
       acc: Array[Double],
       x: Array[Double],
       label: Int,
       w1: Array[Double], // row-major [d*h]
       w2: Array[Double], // row-major [h*k]
-      d: Int, h: Int, k: Int): Array[Double] = {
+      d: Int, h: Int, k: Int): Unit = {
     val base2 = d * h
     val tail = d * h + h * k
     // forward: hidden = σ(x·W1)
@@ -128,7 +121,6 @@ object Backprop {
     acc(tail) += 1.0
     acc(tail + 1) += -math.log(math.max(p(label), 1e-300))
     if (best == label) acc(tail + 2) += 1.0
-    acc
   }
 
   /** Fine-tune `(w1, w2)` for `cfg.epochs` full-batch steps over
@@ -152,24 +144,10 @@ object Backprop {
     val vel = new Array[Double](d * h + h * k)
     val rows = data.select(col("id").cast("long"), col("x"),
       col("label").cast("int")).as[(Long, Array[Double], Int)]
-    // the epoch loop reads `rows` only on the treeAggregate path; the
-    // deterministic path folds over `canon` (persisted below) and reads
-    // `rows` exactly once to build it — caching it there is a pure
-    // storage-write waste (q111 is 81 tiny jobs of min(32, cores)
-    // tasks each — 4 on a 4-core host — and fixed per-job cost is the
-    // whole query)
-    if (!cfg.deterministic) rows.persist()
-    // depth-2 tree merge only pays once there are enough partitions to
-    // bottleneck the driver; below that it just adds a stage to every
-    // one of the `epochs` jobs (a 1000-executor run takes the tree
-    // path, the 500-row fixture takes the flat one)
-    val depth = if (rows.rdd.getNumPartitions > 16) 2 else 1
-    // reproducible mode: canonicalize ONCE (shuffle+sort by id), reuse
-    // the persisted canonical layout for every epoch's ordered fold
-    val canon = if (cfg.deterministic)
-      Some(Reproducible.canonicalize(
-        rows.rdd.map { case (id, x, l) => (id, (x, l)) }, 32).persist())
-    else None
+    // canonicalize ONCE (shuffle+sort by id); every epoch folds over
+    // the persisted canonical layout
+    val canon = Reproducible.canonicalize(
+      rows.rdd.map { case (id, x, l) => (id, (x, l)) }, Reproducible.Parts).persist()
     val stats = Seq.newBuilder[EpochStat]
     try {
       for (epoch <- 0 to cfg.epochs) {
@@ -183,29 +161,11 @@ object Backprop {
         // tasks see exactly the values the broadcast carried —
         // bit-identical trajectory (golden oracle unchanged).
         val cw1 = w1; val cw2 = w2
-        val g = canon match {
-          case Some(c) =>
-            Reproducible.aggregate(c, d * h + h * k + 3) {
-              case (acc, _, (x, label)) =>
-                require(x.length == d, s"arity ${x.length} != numdims $d")
-                require(label >= 0 && label < k,
-                  s"label $label outside [0,$k)")
-                accumulateBackprop(acc, x, label, cw1, cw2,
-                  d, h, k); ()
-            }
-          case None =>
-            rows.rdd.treeAggregate(new Array[Double](d * h + h * k + 3))(
-              seqOp = { case (acc, (_, x, label)) =>
-                require(x.length == d, s"arity ${x.length} != numdims $d")
-                require(label >= 0 && label < k,
-                  s"label $label outside [0,$k)")
-                accumulateBackprop(acc, x, label, cw1, cw2,
-                  d, h, k)
-              },
-              combOp = (a, b) => {
-                var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-              },
-              depth = depth)
+        val g = Reproducible.aggregate(canon, d * h + h * k + 3) {
+          case (acc, _, (x, label)) =>
+            require(x.length == d, s"arity ${x.length} != numdims $d")
+            require(label >= 0 && label < k, s"label $label outside [0,$k)")
+            accumulateBackprop(acc, x, label, cw1, cw2, d, h, k)
         }
         val tail = d * h + h * k
         val n = g(tail).toLong
@@ -222,10 +182,7 @@ object Backprop {
           }
         }
       }
-    } finally {
-      rows.unpersist()
-      canon.foreach(_.unpersist())
-    }
+    } finally canon.unpersist()
     (RBM.fromFlat(w1, d, h), RBM.fromFlat(w2, h, k), stats.result())
   }
 }

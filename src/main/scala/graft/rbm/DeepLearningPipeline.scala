@@ -16,7 +16,7 @@ import graft.sources.PixelText
   * semantics, one weight layout, full-precision weights (the reference
   * truncated to 3 decimals on every epoch round-trip), and no
   * per-epoch HDFS re-materialization — weights stay on the driver,
-  * data stays cached.
+  * data stays cached in [[DBN.train]]'s canonical layout.
   */
 object DeepLearningPipeline {
 
@@ -28,31 +28,17 @@ object DeepLearningPipeline {
       layerSizes: Seq[Int],
       seed: Long = 42L): Seq[breeze.linalg.DenseMatrix[Double]] = {
     require(layerSizes.length >= 2, "need at least one layer pair")
-    var input = PixelText.read(spark, inputDir, layerSizes.head)
-    val weights = Seq.newBuilder[breeze.linalg.DenseMatrix[Double]]
-    for (layer <- 0 until layerSizes.length - 1) {
-      val cfg = RBM.Config(layerSizes(layer), layerSizes(layer + 1), seed = seed + layer)
-      var w = RBM.initWeights(cfg)
-      input.persist()
-      for (_ <- 0 until maxEpoch) w = RBM.cd1Epoch(spark, input, w, cfg)
-      weights += w
-      // persist BEFORE the write so the text materialization populates
-      // the cache; without it, unpersisting the old input would force
-      // the next layer's first action to recompute every prior
-      // propagate back to the source (O(L²) passes for L layers)
-      val next = DBN.propagate(spark, input, w).persist()
+    import spark.implicits._
+    val stack = DBN.train(spark, PixelText.read(spark, inputDir, layerSizes.head),
+      layerSizes, maxEpoch, seed) { (layer, next) =>
       // materialize layer k+1 in the reference's text form as a side
       // artifact (driver.java:229 chained output→input dirs), but keep
-      // computing on `next` directly: re-reading the file would
-      // re-assign ids and add a full text parse per layer for data we
-      // already hold (write's floor(v*255) is an identity on
-      // propagate's already-quantized output, so file and `next` agree)
-      PixelText.write(next, s"$outputDir/layer${layer + 1}")
-      input.unpersist()
-      input = next
+      // computing on `next` directly: re-reading the file would add a
+      // full text parse per layer for data we already hold (write's
+      // floor(v*255) is an identity on the already-quantized layer, and
+      // each line carries its id, so file and `next` agree)
+      PixelText.write(next.toDF("id", "x"), s"$outputDir/layer${layer + 1}")
     }
-    input.unpersist()
-    val stack = weights.result()
     // final weight dump, full precision (vs DecimalFormat("#.###"))
     stack.zipWithIndex.foreach { case (w, i) =>
       RBM.weightsToDf(spark, w).coalesce(1)

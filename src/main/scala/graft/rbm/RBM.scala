@@ -1,6 +1,7 @@
 package graft.rbm
 
 import breeze.linalg.DenseMatrix
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -17,15 +18,16 @@ import org.apache.spark.sql.functions.col
   * the matrix between iterations — a bug we do not replicate).
   *
   * Execution shape (SURVEY §3.2 Spark translation): ship the weight
-  * matrix down in the task closure, compute the per-example CD-1
-  * gradient inside `treeAggregate`, and merge partial gradient
-  * matrices pairwise —
+  * matrix down in the task closure and compute the per-example CD-1
+  * gradient inside [[Reproducible.aggregate]]'s per-partition fold —
   * this *fuses* the reference's explode-to-(weightId,delta) flatMap
   * (A8) with its per-key SUM (A9), so no `numCase×d×h`-row shuffle
   * ever materializes. The reference shipped that volume as text KV
-  * pairs with no combiner (`driver.java:152-162`); here the shuffled
-  * bytes are `numPartitions × d×h` doubles, independent of row count —
-  * the property that makes the job viable at 100 TB.
+  * pairs with no combiner (`driver.java:152-162`); here an epoch sends
+  * `nParts × d×h` doubles to the driver, independent of row count —
+  * the property that makes the job viable at 100 TB. The rows shuffle
+  * once per training input, into [[Reproducible]]'s canonical layout,
+  * which fixes the position of every float add.
   *
   * Determinism: the reference samples hidden states with an unseeded
   * per-record `new Random()` (`rbmmapper.java:169`) — SURVEY §7.2
@@ -94,16 +96,16 @@ object RBM {
     * (reference positive phase `rbmmapper.java:144-183`, negative phase
     * `rbmmapper.java:185-220`, assembly `propmapper.java:242-256`).
     * Accumulates into the flat row-major `acc[i*h + j]` in place; the
-    * per-example kernel of [[cd1Epoch]]'s treeAggregate.
+    * per-example kernel of [[epoch]]'s fold.
     */
-  private[graft] def accumulateGradient(
+  private def accumulateGradient(
       acc: Array[Double],
       x: Array[Double],
       w: Array[Double], // row-major [d*h]
       d: Int,
       h: Int,
       id: Long,
-      draw: HashDraw): Array[Double] = {
+      draw: HashDraw): Unit = {
     // positive phase: poshidprobs = σ(xᵀW) (biases fixed 0)
     val poshidprobs = new Array[Double](h)
     var j = 0
@@ -150,7 +152,6 @@ object RBM {
       }
       i += 1
     }
-    acc
   }
 
   /** Row-major flattening helpers for the closure/API boundary. */
@@ -171,48 +172,50 @@ object RBM {
     * `W + ε/numCase · Σ_examples grad` (reference `driver.java:204`).
     *
     * `data` must have columns (`id` long, `x` array&lt;double&gt;).
-    * The weight matrix ships to the tasks (A3) as a flat array in the
-    * task closure — O(d×h) doubles, serialized once per job into the
-    * task binary Spark already broadcasts, so no explicit broadcast is
-    * created or destroyed per epoch. Gradients merge through a depth-2
-    * treeAggregate so the driver receives `O(d×h)` doubles no matter
-    * how many executors contributed.
+    * Canonicalizes `data` for this one epoch; a multi-epoch loop
+    * canonicalizes once and calls [[epoch]] ([[DBN.pretrain]]).
     */
   def cd1Epoch(
       spark: SparkSession,
       data: DataFrame,
       w: DenseMatrix[Double],
-      cfg: Config,
-      deterministic: Boolean = false): DenseMatrix[Double] = {
+      cfg: Config): DenseMatrix[Double] =
+    epoch(canonical(spark, data), w, cfg)
+
+  /** `data`'s (`id`, `x`) rows in [[Reproducible]]'s canonical layout. */
+  private[rbm] def canonical(
+      spark: SparkSession,
+      data: DataFrame): RDD[(Long, Array[Double])] = {
     import spark.implicits._
+    Reproducible.canonicalize(
+      data.select(col("id").cast("long"), col("x")).as[(Long, Array[Double])].rdd,
+      Reproducible.Parts)
+  }
+
+  /** One CD-1 epoch over a [[canonical]] input. The weight matrix ships
+    * to the tasks (A3) as a flat array in the task closure — O(d×h)
+    * doubles, serialized once per job into the task binary Spark
+    * already broadcasts, so no explicit broadcast is created or
+    * destroyed per epoch.
+    */
+  private[rbm] def epoch(
+      canon: RDD[(Long, Array[Double])],
+      w: DenseMatrix[Double],
+      cfg: Config): DenseMatrix[Double] = {
     val d = cfg.numdims
     val h = cfg.numhid
     val wFlat = toFlat(w)
     val draw = new HashDraw(cfg.seed)
-    val rows = data.select(col("id").cast("long"), col("x")).as[(Long, Array[Double])]
     // Buffer slot d*h carries the example count, fusing numCase into
     // the same single pass (the reference needed a separate driver-side
     // count; a naive port would call rows.count() first — one full
     // extra scan of the data per epoch).
-    // `deterministic` swaps the completion-order treeAggregate for
-    // [[Reproducible]]'s canonical-order fold — bit-identical across
-    // runs/layouts, for golden-pinned consumers (q111's pre-train).
-    val gradFlat = if (deterministic) {
-      Reproducible.aggregate(
-        Reproducible.canonicalize(rows.rdd, 32), d * h + 1) { (acc, id, x) =>
-        require(x.length == d, s"arity ${x.length} != numdims $d")
-        acc(d * h) += 1.0
-        accumulateGradient(acc, x, wFlat, d, h, id, draw); ()
-      }
-    } else rows.rdd.treeAggregate(new Array[Double](d * h + 1))(
-      seqOp = { case (acc, (id, x)) =>
-        require(x.length == d,
-          s"arity ${x.length} != numdims $d") // rbmmapper.java:108-114
-        acc(d * h) += 1.0
-        accumulateGradient(acc, x, wFlat, d, h, id, draw)
-      },
-      combOp = (a, b) => { var k = 0; while (k < a.length) { a(k) += b(k); k += 1 }; a },
-      depth = 2)
+    val gradFlat = Reproducible.aggregate(canon, d * h + 1) { (acc, id, x) =>
+      require(x.length == d,
+        s"arity ${x.length} != numdims $d") // rbmmapper.java:108-114
+      acc(d * h) += 1.0
+      accumulateGradient(acc, x, wFlat, d, h, id, draw)
+    }
     val numCase = gradFlat(d * h).toLong
     require(numCase > 0,
       "cd1Epoch on empty input (scale = ε/0 would silently produce NaN weights)")

@@ -17,8 +17,9 @@ object RbmQueries extends QueryModule {
     // the epoch is deterministic, partitioning-invariant AND has a
     // closed-form DuckDB twin (the Gaussian W0 ships as a literal
     // VALUES table generated from RBM.initWeights itself). Weights
-    // rounded to 6dp on both engines; the gradient sum's merge-order
-    // noise is ~1e-12 — far inside the oracle's 2e-6 float tolerance.
+    // rounded to 6dp on both engines; the gradient sums in canonical
+    // order (Reproducible), so the weights are bit-identical under any
+    // layout and core count.
     // The golden trajectory test in RbmGoldenSpec additionally pins
     // the kernel against an independent scalar implementation.
     "q15_rbm_cd1_epoch" -> ((s, d) => {
@@ -41,10 +42,9 @@ object RbmQueries extends QueryModule {
     // head through the full-batch distributed gradient shape. Output:
     // the per-epoch loss/accuracy trajectory (epoch 0 = pre-trained
     // stack before any supervised step — the trajectory IS the proof
-    // the fine-tune moves the stack). Both stages run in
-    // [[Reproducible]]'s bitwise-reproducible mode (canonical id-hash
-    // partitioning + ordered folds): an 80-epoch momentum loop
-    // amplifies treeAggregate's completion-order float noise
+    // the fine-tune moves the stack). Both stages sum gradients through
+    // [[Reproducible]] (canonical id-hash partitioning + ordered folds):
+    // an 80-epoch momentum loop would amplify any float-order noise
     // chaotically, but the canonical-order fold is bit-identical
     // across runs and file layouts, so the trajectory is pinned by a
     // per-SF golden VALUES oracle (generated by tools/gen_q111_golden;
@@ -54,15 +54,13 @@ object RbmQueries extends QueryModule {
     // sequential golden trajectory and the accuracy-improves gate.
     "q111_backprop_finetune" -> ((s, d) => {
       val cfg = Backprop.Config(d = 64, h = NumHid, k = 10,
-        epsilon = 2.0, momentum = 0.9, epochs = 80, seed = 42L,
-        deterministic = true)
+        epsilon = 2.0, momentum = 0.9, epochs = 80, seed = 42L)
       val data = Tables.embeddings(s, d)
         .select(col("vec_id").as("id"),
           transform(col("embedding"), x => x.cast("double")).as("x"),
           col("label"))
       val rbmCfg = RBM.Config(numdims = 64, numhid = NumHid, seed = 42L)
-      val w1 = RBM.cd1Epoch(s, data, RBM.initWeights(rbmCfg), rbmCfg,
-        deterministic = true)
+      val w1 = RBM.cd1Epoch(s, data, RBM.initWeights(rbmCfg), rbmCfg)
       val (_, _, stats) = Backprop.finetune(s, data, w1, cfg)
       import s.implicits._
       stats.map(t => (t.epoch, BigDecimal(t.loss).setScale(6,
@@ -113,8 +111,8 @@ object RbmQueries extends QueryModule {
   /** One CD-1 epoch as a chain of CTE definitions (no WITH keyword,
     * no trailing comma): from example table `ex(id,i,x)` and weight
     * table `w0(i,j,w)` to `<p>w1(i,j,w)`. `nExpr` is a scalar SQL
-    * expression for numCase. Mirrors [[RBM.accumulateGradient]] +
-    * the ε/numCase update of [[RBM.cd1Epoch]]; the Bernoulli draw is
+    * expression for numCase. Mirrors [[RBM.cd1Epoch]]'s per-example
+    * gradient and ε/numCase update; the Bernoulli draw is
     * the same md5-millionths threshold as [[RBM.HashDraw]].
     */
   private[graft] def cd1ChainSql(

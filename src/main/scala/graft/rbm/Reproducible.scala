@@ -5,17 +5,11 @@ import org.apache.spark.rdd.RDD
 
 import scala.reflect.ClassTag
 
-/** Bitwise-reproducible full-batch aggregation — the eval mode a
-  * training-audit pipeline needs when a metric trajectory must be
-  * EXACTLY rerunnable (golden-pinned CI gates, cross-run regression
-  * hashes, the q111 CORRECTNESS row).
-  *
-  * `treeAggregate` (the throughput path of [[RBM.cd1Epoch]] /
-  * [[Backprop.finetune]]) merges partition partials in task-COMPLETION
-  * order, so float sums carry ~1e-16-relative run-to-run noise; one
-  * epoch rounds that away, but an 80-epoch momentum loop amplifies it
-  * chaotically (why q111 was declared no-oracle through round 12).
-  * This path removes every ordering freedom instead of tolerating it:
+/** The one gradient sum of the `rbm` package: a full-batch aggregation
+  * whose every float add has a data-determined position, so CD-1
+  * epochs, DBN stacks and 80-epoch momentum trajectories are
+  * bit-identical across runs, input file layouts and core counts
+  * (q111's golden VALUES oracle stands on it).
   *
   *  1. `canonicalize` hash-partitions by the LONG example id
   *     (`HashPartitioner` — a pure function of the id, independent of
@@ -24,8 +18,7 @@ import scala.reflect.ClassTag
   *     of the data alone;
   *  2. [[aggregate]] folds each canonical partition sequentially into
   *     its own partial, collects the (pid, partial) pairs —
-  *     model-sized × nParts, the same driver budget as
-  *     treeAggregate's root — and merges them in PARTITION INDEX order
+  *     model-sized × nParts — and merges them in PARTITION INDEX order
   *     on the driver.
   *
   * Canonical partitions set the fold ORDER; they do not set the task
@@ -35,15 +28,16 @@ import scala.reflect.ClassTag
   * `pid` is still the canonical index). A job's fixed cost grows with
   * its task count, and an epoch loop pays it once per epoch: with 32
   * canonical partitions on 4 cores, 32 tasks per job cost about twice
-  * what 4 do, for the same bits. The remaining cost vs treeAggregate
-  * is one shuffle+sort ONCE before the epoch loop (the canonical RDD is
-  * persisted and reused by every epoch) and a driver merge of nParts
-  * partials per epoch instead of a tree — partials are O(model), not
-  * O(rows), so even 4096 × a 10 KB model is driver-trivial. The
-  * determinism/throughput trade is the caller's: default paths keep
-  * treeAggregate; reproducible-eval opts in.
+  * what 4 do, for the same bits. The layout costs one O(rows)
+  * shuffle+sort per training input; a loop persists the canonical RDD
+  * and pays it once for all its epochs (and, in [[DBN]], all its
+  * layers). Each epoch then ships nParts O(model) partials to the
+  * driver — even 4096 × a 10 KB model is driver-trivial.
   */
 object Reproducible {
+
+  /** Canonical partition count of every training input. */
+  private[rbm] val Parts = 32
 
   /** Canonical layout: partition = hash(id) % nParts, rows sorted by
     * id within each partition. Persist the result if it feeds a loop.

@@ -105,14 +105,6 @@ object StreamQueries extends QueryModule {
         .orderBy(col("event_type")))
     ,
 
-    // Stateful SESSION windows under replay, append mode — the only
-    // output mode session aggregations support, which means a session
-    // row is emitted exactly once, when the watermark finalizes it
-    // (the replay harness's sentinel batch advances the watermark past
-    // every real session). Proven equal to the batch
-    // lag/cumulative-sum sessionization (q30's construction) computed
-    // at the same µs precision the stream sees. The decimal-summed
-    // value keeps the per-session total order-independent.
     // Stream-STREAM inner join under replay: each click joined to the
     // same user's preceding views within 2h. Both sides carry
     // watermarks — the state-cleanup contract that makes this run
@@ -464,6 +456,14 @@ object StreamQueries extends QueryModule {
     // shape.
     "q150_stream_merge_sink" -> ((s, d) => replayMergeSink(s, d)),
 
+    // Stateful SESSION windows under replay, append mode — the only
+    // output mode session aggregations support, which means a session
+    // row is emitted exactly once, when the watermark finalizes it
+    // (the replay harness's sentinel batch advances the watermark past
+    // every real session). Proven equal to the batch
+    // lag/cumulative-sum sessionization (q30's construction) computed
+    // at the same µs precision the stream sees. The decimal-summed
+    // value keeps the per-session total order-independent.
     "q101_stream_session_replay" -> ((s, d) =>
       replay(s, d, mode = "append", sentinel = true) { stream =>
         stream.withWatermark("ts", "10 minutes")

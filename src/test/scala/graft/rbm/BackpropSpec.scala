@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Pins the backprop fine-tune (q111) the way RbmGoldenSpec pins CD-1:
   * an independent scalar implementation (idiomatic collections code,
   * no shared loops with the engine's flat-array kernel) must agree
-  * elementwise to 1e-9 on a tiny network; plus partition invariance
-  * and the verdict gate — fine-tuning IMPROVES on the pre-trained
+  * elementwise to 1e-9 on a tiny network; plus bit-exact partition
+  * invariance and the verdict gate — fine-tuning IMPROVES on the pre-trained
   * stack's supervised metrics.
   */
 class BackpropSpec extends SparkSpec {
@@ -101,15 +101,14 @@ class BackpropSpec extends SparkSpec {
       assert(math.abs(gw2(j, c) - w2(j)(c)) < 1e-9, s"W2($j,$c)")
   }
 
-  test("finetune is partition-invariant (1 vs 7 partitions, 1e-9)") {
+  test("finetune is bit-identical across 1, 5 and 7 partitions") {
     val w1init = RBM.initWeights(RBM.Config(d, h, seed = 7L))
     val (a1, a2, as) = Backprop.finetune(spark, df.repartition(1), w1init, cfg)
-    val (b1, b2, bs) = Backprop.finetune(spark, df.repartition(7), w1init, cfg)
-    as.zip(bs).foreach { case (a, b) =>
-      assert(math.abs(a.loss - b.loss) < 1e-9 && a.n == b.n)
+    for (p <- Seq(5, 7)) {
+      val (b1, b2, bs) = Backprop.finetune(spark, df.repartition(p), w1init, cfg)
+      assert(as == bs, s"trajectory differs at $p partitions")
+      assert(a1 == b1 && a2 == b2, s"weights differ at $p partitions")
     }
-    assert(breeze.linalg.max(breeze.numerics.abs(a1 - b1)) < 1e-9)
-    assert(breeze.linalg.max(breeze.numerics.abs(a2 - b2)) < 1e-9)
   }
 
   test("q111 on the fixture: loss decreases and accuracy improves over " +

@@ -41,16 +41,17 @@ class PipelineSpec extends SparkSpec {
     val epochs = 2
     val seed = 7L
     val scanned = spark.sparkContext.longAccumulator("pretrain source rows")
-    // one partition: the default cd1Epoch merges partials in completion
-    // order, so only a single-partition input makes the two bit-equal
-    val src = spark.range(0, 40, 1, 1).map { id =>
+    val src = spark.range(0, 40, 1, 5).map { id =>
       scanned.add(1)
       (id, Array.tabulate(6)(c => ((id * 37 + c * 11) % 256) / 255.0))
     }.toDF("id", "x")
     // only pretrain's own entries count; earlier suites share the session
     spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val stack = DBN.pretrain(spark, src, sizes, epochs, seed)
     assert(spark.sharedState.cacheManager.isEmpty, "pretrain left a cache entry")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "pretrain left a persisted RDD")
     // each layer's first epoch must read the previous layer's cache:
     // one source scan, not one per layer
     assert(scanned.value == 40L, s"source rows computed: ${scanned.value}")

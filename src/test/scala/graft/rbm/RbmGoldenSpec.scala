@@ -80,9 +80,11 @@ class RbmGoldenSpec extends SparkSpec {
   test("partitioning invariance: per-example seeding makes the epoch " +
     "independent of data distribution across partitions") {
     val a = runEngine(partitions = 1)
-    val b = runEngine(partitions = 5)
-    for (i <- 0 until d; j <- 0 until h)
-      assert(math.abs(a(i, j) - b(i, j)) < 1e-12, s"W($i,$j) differs")
+    for (p <- Seq(5, 7)) {
+      val b = runEngine(partitions = p)
+      for (i <- 0 until d; j <- 0 until h)
+        assert(a(i, j) == b(i, j), s"W($i,$j) differs at $p partitions")
+    }
   }
 
   test("gradient-sum linearity: epoch on duplicated data equals epoch " +
@@ -140,6 +142,15 @@ class RbmGoldenSpec extends SparkSpec {
       s"CD-1 did not reduce reconstruction error: $e0 -> ${curve.last}")
     assert(curve.last <= curve.head,
       s"error increased over training: ${curve.head} -> ${curve.last}")
+  }
+
+  test("DBN pretrain returns bit-identical stacks for 1, 5 and 7 partitions") {
+    import spark.implicits._
+    val df = spark.createDataset(examples).toDF("id", "x")
+    val stacks = Seq(1, 5, 7).map(p =>
+      DBN.pretrain(spark, df.repartition(p), Seq(d, h, 2), epochs = 2, seed = 1L)
+        .map(RBM.toFlat(_).toSeq))
+    assert(stacks.distinct.length == 1, "stack depends on the partitioning")
   }
 
   test("DBN layer-wise pretrain runs and propagate quantizes to the " +
